@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.io.ParquetTableIO
 import java.nio.file.Files
 
@@ -27,35 +26,10 @@ import java.nio.file.Files
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.defaultCores
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILES", "50000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode only: checkpoint tables are byte-small but row-heavy, so
-      // the 128m default would give heavy explode stages 1-2 input splits;
-      // on a real cluster at design scale keep the default.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hash joins over sort-merge: the scoring join's big side is a streamed
-      // exploded term stream - sorting it (SMJ) spills; SHJ hashes the small
-      // side per partition (SURVEY.md J1)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/scratch location override (e.g. /dev/shm for the scaling
-      // protocol: one box's disk does not scale with thread count, cluster
-      // storage does scale with executors)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // shuffle width follows the pipeline corpus size (see Pipeline.main):
-    // wide-key aggregations spill at 32 static partitions for 10^6-file runs,
-    // while a statically wide setting doubles the 5·10^4-file default
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                   math.max(cpus.toInt, math.min(2048, nFiles / 4000)).toString)
+    val spark = LocalSession.create("graft-bench", cpus)
+    LocalSession.sizeShufflesToCorpus(spark, nFiles)
 
     // JVM/codegen warmup so the first measured query isn't charged for it
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -87,4 +87,10 @@ object TermCounter {
   /** Column form: drop-in replacement for the HOF term-frequency builder. */
   def termCounts(c: Column): Column =
     ColumnBridge.column(TermCounts(ColumnBridge.expression(c)))
+
+  /** The one IDF definition, smoothed: `ln((n+1)/(df+1)) + 1` for a term in
+    * `df` of `n` documents. Never 0, so a term present in every document
+    * still contributes to the cosine. */
+  def idf(n: Column, df: Column): Column =
+    org.apache.spark.sql.functions.log((n + 1).cast("double") / (df + 1)) + 1.0
 }

@@ -50,8 +50,8 @@ import org.json4s.jackson.JsonMethods
   * the poll window and its sequence is skipped. Single-writer-per-table
   * workloads (this engine's checkpoint/delta runs) never hit the window.
   *
-  * What this buys at 100 TB, measured in SnapshotDeltaBench / asserted in
-  * SnapshotTableSpec:
+  * What this buys at 100 TB, measured in BENCH.md ("Snapshot format vs plain
+  * parquet: composed daily churn") / asserted in SnapshotTableSpec:
   *  - append / delete commits move only the CHANGED bytes (the manifest
   *    re-lists existing files — a metadata-only commit), vs the full-table
   *    rewrite a directory-swap parquet table needs;
@@ -536,7 +536,8 @@ final class SnapshotTable(val root: String, val name: String) extends Serializab
     * dimensions and [[readRange]] prunes on either one. A linear
     * `sortBy(a, b)` gives `b` no locality at all; the z-curve gives each of
     * the two dimensions ~√nFiles-factor pruning (asserted in
-    * SnapshotTableSpec, measured in SnapshotDeltaBench). The z value is
+    * SnapshotTableSpec, measured in BENCH.md's composed-daily-churn
+    * section). The z value is
     * computed from codegen'd bitwise built-ins, used only as the
     * shuffle/sort key, and never written. */
   def rewriteDataFilesZOrder(spark: SparkSession, colA: String, colB: String,

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * pruning bites on either column. A linear `sortBy(a, b)` clusters only
   * the prefix column — a range scan on `b` then touches every file; the
   * z-curve trades a small loss of `a`-locality for `b` going from "no
-  * pruning" to "√-factor pruning" (both measured in SnapshotTableSpec and
-  * SnapshotDeltaBench).
+  * pruning" to "√-factor pruning" (asserted in SnapshotTableSpec, measured
+  * in BENCH.md, "Snapshot format vs plain parquet: composed daily churn").
   *
   * Built entirely from codegen'd built-ins (shiftleft + bitwise and/or) —
   * the classic magic-number bit-spread, 6 ops per dimension, no UDF.

@@ -68,12 +68,10 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     * Stage 3: context scoring + top-1. The kbCtx broadcast is decided on
     * measured size (a DBpedia-scale KB's exploded context table is multi-GB
     * — then the scoring join runs as a shuffled hash join), mirroring the
-    * dictionary-join policy. spark.graft.idf.approx=true switches the
-    * document-frequency aggregation to HLL for 10^12-row corpora. */
+    * dictionary-join policy. */
   private def linkAndMaterialize(spark: SparkSession, mentions: DataFrame,
       cands: DataFrame, contexts: DataFrame, kbCtx: DataFrame,
       broadcastKbCtxMaxRows: Long, broadcastKbTermsMaxRows: Long): DataFrame = {
-    val approxIdf = spark.conf.getOption("spark.graft.idf.approx").exists(_.toBoolean)
     // ONE measurement job for both policy decisions (row count for the join
     // strategy, distinct-term count for the vocabulary-prune broadcast — the
     // term set is far smaller than the exploded context table, so it often
@@ -85,7 +83,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val kbTermRows = kbMeasure.getLong(1)
     val top1 = stage(spark, "stage3_top1",
       Scoring.top1(Scoring.score(mentions, cands, kbCtx, Some(contexts),
-        broadcastKbCtx = kbCtxRows <= broadcastKbCtxMaxRows, approxIdf = approxIdf,
+        broadcastKbCtx = kbCtxRows <= broadcastKbCtxMaxRows,
         broadcastKbTerms = kbTermRows <= broadcastKbTermsMaxRows)))
 
     // Stage 4: canonicalize + materialize triples, partitioned by predicate
@@ -224,34 +222,8 @@ object Pipeline {
     def flag(name: String): Option[String] = {
       val i = args.indexOf(name); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode only: checkpoint tables are byte-small but row-heavy, so
-      // the 128m default would give heavy explode stages 1-2 input splits;
-      // on a real cluster at design scale keep the default.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.adaptive.enabled", "true")
-      // hash joins over sort-merge: the scoring join's big side is a streamed
-      // exploded term stream - sorting it (SMJ) spills; SHJ hashes the small
-      // side per partition (SURVEY.md J1)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // scale the shuffle width with the corpus and let AQE coalesce back down:
-    // at 32 static partitions the 1M-file run's wide-key aggregations (triple
-    // dedup) spill (stage4 106 s → 54 s with 512); a static wide setting
-    // conversely doubles small runs (measured 48 s → 98 s at 50k with 256),
-    // so the width follows the input size. On a real cluster this is the
-    // shuffle-partition sizing the north rule expects per deployment.
-    val initialParts = math.max(cpus.toInt, math.min(2048, nFiles / 4000))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                   initialParts.toString)
+    val spark = graft.LocalSession.create("graft-kg-pipeline")
+    graft.LocalSession.sizeShufflesToCorpus(spark, nFiles)
     try {
       // --delta prevCkpt: incremental run — synthetic mode uses the V2
       // (mutated) corpus against a previous full run's checkpoints

@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.TermCounter
 
 /** Context-based disambiguation (SURVEY.md §2.5 A1–A4, J5, W1/W3): score each
   * (mention, candidate entity) pair with TF-IDF/cosine between the mention's
@@ -42,7 +43,7 @@ object Scoring {
     * including entry order). */
   private def ctxTf(ctxs: DataFrame): DataFrame =
     ctxs.select(col("ctx_id"),
-                explode(graft.functions.TermCounter.termCounts(col("ctx_terms"))).as("e"))
+                explode(TermCounter.termCounts(col("ctx_terms"))).as("e"))
       .select(col("ctx_id"), col("e.term").as("term"), col("e.tf").as("tf"))
 
   /** Per-term document frequency of a context set — the additive IDF
@@ -56,7 +57,7 @@ object Scoring {
   def idfFromStats(stats: DataFrame, nCtx: DataFrame): DataFrame =
     stats.groupBy(col("term")).agg(sum(col("df")).as("df"))
       .crossJoin(broadcast(nCtx))
-      .select(col("term"), (log((col("n") + 1).cast("double") / (col("df") + 1)) + 1.0).as("idf"))
+      .select(col("term"), TermCounter.idf(col("n"), col("df")).as("idf"))
 
   /** `contexts`: the per-line context table (already unique by ctx_id) when
     * the caller has it checkpointed (the pipeline path — no dedup shuffle);
@@ -65,9 +66,6 @@ object Scoring {
     * `broadcastKbCtx`: the entity context-vector table is broadcast only when
     * the caller measured it small (a DBpedia-scale KB is multi-GB exploded —
     * then the join runs as a shuffled hash join; preferSortMergeJoin=false).
-    * `approxIdf`: HLL (`approx_count_distinct`) document frequencies for
-    * corpora where even the vocabulary-bounded exact pre-aggregation is too
-    * wide (10^12-row scale); exact at test scale.
     * `idfOverride`: a precomputed (term, idf) snapshot (streaming's global
     * IDF) replacing the corpus-local computation.
     * `broadcastKbTerms`: whether the KB-vocabulary prune's distinct-term set
@@ -78,7 +76,6 @@ object Scoring {
   def score(mentions: DataFrame, candidates: DataFrame, kbCtx: DataFrame,
             contexts: Option[DataFrame] = None,
             broadcastKbCtx: Boolean = true,
-            approxIdf: Boolean = false,
             idfOverride: Option[DataFrame] = None,
             broadcastKbTerms: Boolean = true): DataFrame = {
 
@@ -101,12 +98,9 @@ object Scoring {
 
     // A2: document frequency / IDF over the context corpus. tf has exactly
     // one row per (ctx, term), so df = count(*) — partial aggregation shrinks
-    // each partition to vocabulary size before the (cheap) exchange; the HLL
-    // variant sketches instead of counting when even that is too wide.
+    // each partition to vocabulary size before the (cheap) exchange.
     val idf = idfOverride.getOrElse {
-      val df =
-        if (approxIdf) tf.groupBy(col("term")).agg(approx_count_distinct(col("ctx_id")).as("df"))
-        else tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       // context count: when the caller passes a checkpointed contexts table
       // (the pipeline path) count() is a parquet-metadata read — the (n+1)
       // numerator becomes a literal, dropping the separate aggregation pass
@@ -115,11 +109,11 @@ object Scoring {
       contexts match {
         case Some(c) =>
           val n = c.count()
-          df.select(col("term"), (log(lit((n + 1).toDouble) / (col("df") + 1)) + 1.0).as("idf"))
+          df.select(col("term"), TermCounter.idf(lit(n), col("df")).as("idf"))
         case None =>
           val nCtx = ctxs.agg(count(lit(1)).as("n"))
           df.crossJoin(broadcast(nCtx))
-            .select(col("term"), (log((col("n") + 1).cast("double") / (col("df") + 1)) + 1.0).as("idf"))
+            .select(col("term"), TermCounter.idf(col("n"), col("df")).as("idf"))
       }
     }
 

@@ -79,8 +79,8 @@ object Bpe {
     * (no false negatives), and a false positive (a symbol itself containing
     * the separator around a/b) merely runs the fold, which is then the
     * identity. Measured at a 10^5-word vocabulary × 64 merges: the merge
-    * apply dropped from ~0.97 s/round to ~0.2 s/round (BpeScaleBench,
-    * BENCH.md r6). */
+    * apply dropped from ~0.97 s/round to ~0.2 s/round (BENCH.md, "BPE merge
+    * rounds at vocabulary scale"). */
   def mergePair(syms: Column, a: String, b: String): Column = {
     val sep = "\u0000"
     val folded = aggregate(syms, array().cast("array<string>"), (acc, t) =>

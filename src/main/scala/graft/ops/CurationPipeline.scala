@@ -454,13 +454,7 @@ object CurationPipeline {
     def flag(name: String): Option[String] = {
       val i = args.indexOf(name); if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.create("graft-curation")
     try {
       val docs = graft.Tables.documents(spark, sfDir)
       val pipe = new CurationPipeline(new ParquetTableIO(ckpt), s"cur-$sfDir", resume)

@@ -328,10 +328,11 @@ object Dedup {
     ngramJaccardFor(Tables.documents(spark, dir))
 
   def ngramJaccardFor(docs: DataFrame): DataFrame = {
-    // the distinct shingle-set table is read three times (per-doc counts and
-    // both intersection sides) and the candidate pairs twice — materialize
-    // each so the shingle/minhash towers compute once per run, not per
-    // reference (the pair set is the tiny post-LSH survivor table).
+    // the distinct shingle-set table is read five times (per-doc counts,
+    // both intersection sides and both sides of the signature self-join in
+    // pairsFromSigs) and the candidate pairs twice — materialize each so the
+    // shingle/minhash towers compute once per run, not per reference (the
+    // pair set is the tiny post-LSH survivor table).
     val sets = shinglesFor(docs).select(col("doc_id"), col("shingle")).distinct()
       .localCheckpoint()
     val counts = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))

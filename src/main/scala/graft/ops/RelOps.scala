@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.TermCounter
 
 /** Relational-operator parity implementations (SURVEY.md §2.4–§2.8): the KB
   * dictionary (S2), candidate-generation joins incl. the salted skew join
@@ -130,8 +131,7 @@ object RelOps {
     a1Tf(spark, dir).groupBy(col("term"))
       .agg(sum(when(col("tf") >= 1, 1L).otherwise(0L)).as("df"))
       .crossJoin(broadcast(n))
-      .select(col("term"), col("df"),
-        (log((col("n") + 1).cast("double") / (col("df") + 1)) + 1.0).as("idf"))
+      .select(col("term"), col("df"), TermCounter.idf(col("n"), col("df")).as("idf"))
   }
 
   def a2Idf(spark: SparkSession, dir: String): DataFrame =

@@ -3,16 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (spark_guide.md: one per
-  * suite, lazy). Tests that need a different parallelism build their own. */
+  * suite, lazy), on the production settings at a fixed parallelism. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  def withLogLevel[A](f: => A): A = { spark.sparkContext.setLogLevel("WARN"); f }
+  lazy val spark: SparkSession = LocalSession.create("graft-tests", cores = 4)
 }

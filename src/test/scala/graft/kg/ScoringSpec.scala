@@ -68,28 +68,6 @@ class ScoringSpec extends AnyFunSuite {
     off.foreach { case (k, v) => assert(math.abs(v - byName(k)) < 1e-12, s"$k: $v vs ${byName(k)}") }
   }
 
-  test("approx (HLL) IDF stays within tolerance of exact and keeps the P/R gate") {
-    val src = CorpusGen.srcFiles(spark, 100).toDF()
-    val m = Extract.mentions(src)
-    val dict = Candidates.dictionary(CorpusGen.kbEntries(spark).toDF())
-    val cands = Candidates.candidates(m, dict, broadcastDict = true)
-    val kbc = CorpusGen.kbContexts(spark).toDF()
-    def scores(approx: Boolean) =
-      Scoring.score(m, cands, kbc, approxIdf = approx)
-        .collect().map(r => ((r.getAs[Long]("mention_id"), r.getAs[Long]("entity_id")),
-                              r.getAs[Double]("score"))).toMap
-    val exact = scores(approx = false); val approx = scores(approx = true)
-    assert(exact.keySet == approx.keySet)
-    val maxRel = exact.collect { case (k, e) if e > 1e-6 =>
-      math.abs(approx(k) - e) / e }.max
-    assert(maxRel <= 0.15, s"approx IDF drifted: max relative score diff $maxRel")
-    // and the end-to-end quality gate holds in approx mode too
-    val top1 = Scoring.top1(Scoring.score(m, cands, kbc, approxIdf = true))
-    val triples = Canonicalize.triples(Canonicalize.canonicalMentions(m, top1))
-    val pr = Eval.precisionRecall(triples, CorpusGen.gold(spark, 100).toDF()).collect()(0)
-    assert(pr.getAs[Double]("precision") >= 0.95 && pr.getAs[Double]("recall") >= 0.95)
-  }
-
   test("A5: majority vote elects the cluster majority with deterministic ties") {
     val linked = Seq(
       ("r", "ident", "x", 1L), ("r", "ident", "x", 1L), ("r", "ident", "x", 2L),
