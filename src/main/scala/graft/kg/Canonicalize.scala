@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Majority-vote canonicalization + triple materialization (SURVEY.md A5, S5).
@@ -41,10 +41,10 @@ object Canonicalize {
     * deterministically.
     *
     * The aggregation groups on the NATURAL key (repo, path, commit, line,
-    * pred, entity_id) and builds the subj/obj strings AFTER it: subj is a
-    * bijective encoding of (repo, path, commit, line) (provenance is
-    * functionally determined by it), so the group set is identical to
-    * grouping by (subj, pred, obj) — but max(conf) over a double is
+    * pred, entity_id) and builds the subj/obj strings AFTER it: subj is an
+    * injective encoding of (repo, path, commit, line) ([[subject]];
+    * provenance is functionally determined by it), so the group set is
+    * identical to grouping by (subj, pred, obj) — but max(conf) over a double is
     * HashAggregate-eligible, where the old max(struct(conf, src_repo, ...))
     * forced a partial SortAggregate that sorted every pre-dedup mention row
     * by its ~100-char triple strings, and the concat runs once per OUTPUT
@@ -52,16 +52,32 @@ object Canonicalize {
   def triples(canonical: DataFrame): DataFrame =
     canonical
       .groupBy(col("repo"), col("path"), col("commit"), col("line"),
-        when(col("kind") === "import", lit("imports"))
-          .when(col("kind") === "doccomment", lit("documents"))
-          .otherwise(lit("mentions")).as("pred"),
-        col("entity_id"))
+        predicate(col("kind")).as("pred"), col("entity_id"))
       .agg(max(col("conf")).as("conf"))
       .select(
-        concat(lit("code:"), col("repo"), lit("/"), col("path"),
-               lit("@"), col("commit"), lit("#L"), col("line").cast("string")).as("subj"),
+        subject(col("repo"), col("path"), col("commit"), col("line")).as("subj"),
         col("pred"),
         concat(lit("kb:"), col("entity_id").cast("string")).as("obj"),
         col("conf"),
         col("repo").as("src_repo"), col("path").as("src_path"), col("commit").as("src_commit"))
+
+  /** The triple subject `code:{repo}/{path}@{commit}#L{line}`, shared by the
+    * emitted triples and the gold key space ([[Eval.goldTriples]]). It is
+    * injective: each text field percent-escapes `%` and the separator that
+    * ends it (repo `/` → `%2F`, path `@` → `%40`, commit `#` → `%23`), so
+    * the first `/`, the next `@` and the next `#` split a subject back into
+    * its fields — repo `a` with path `b/c` and repo `a/b` with path `c`
+    * stay two subjects. */
+  def subject(repo: Column, path: Column, commit: Column, line: Column): Column = {
+    def esc(field: Column, sep: String, code: String): Column =
+      replace(replace(field, lit("%"), lit("%25")), lit(sep), lit(code))
+    concat(lit("code:"), esc(repo, "/", "%2F"), lit("/"), esc(path, "@", "%40"),
+           lit("@"), esc(commit, "#", "%23"), lit("#L"), line.cast("string"))
+  }
+
+  /** The triple predicate of a mention kind. */
+  def predicate(kind: Column): Column =
+    when(kind === "import", lit("imports"))
+      .when(kind === "doccomment", lit("documents"))
+      .otherwise(lit("mentions"))
 }

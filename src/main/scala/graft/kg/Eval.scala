@@ -49,14 +49,12 @@ object Eval {
   def precisionRecallFromPath(spark: SparkSession, emitted: DataFrame, goldPath: String): DataFrame =
     precisionRecall(emitted, goldFromPath(spark, goldPath))
 
-  /** Gold rows → the triple key space (same construction as Canonicalize.triples). */
+  /** Gold rows → the triple key space (the subject and predicate of
+    * Canonicalize.triples). */
   def goldTriples(gold: DataFrame): DataFrame =
     gold.select(
-      concat(lit("code:"), col("repo"), lit("/"), col("path"),
-             lit("@"), col("commit"), lit("#L"), col("line").cast("string")).as("subj"),
-      when(col("kind") === "import", lit("imports"))
-        .when(col("kind") === "doccomment", lit("documents"))
-        .otherwise(lit("mentions")).as("pred"),
+      Canonicalize.subject(col("repo"), col("path"), col("commit"), col("line")).as("subj"),
+      Canonicalize.predicate(col("kind")).as("pred"),
       concat(lit("kb:"), col("entity_id").cast("string")).as("obj"))
       .dropDuplicates("subj", "pred", "obj")
 

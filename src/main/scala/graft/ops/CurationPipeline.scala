@@ -33,9 +33,9 @@ import graft.io.{ParquetTableIO, TableIO}
   * unchanged docs' rows back from the previous run's checkpoints;
   * corpus-global stages (exact-dedup reps, span keep/strip, band pairing +
   * CC, split/pack) recompute over the composed COMPACT rows. Output is
-  * byte-identical to a full run on the same corpus (golden-tested), and a
-  * delta run's checkpoint dir is itself a valid base — runs chain day over
-  * day.
+  * byte-identical to a full run on the same corpus (golden-tested), and
+  * every run's checkpoint dir, full or delta, is a valid base — runs chain
+  * day over day.
   */
 final class CurationPipeline(val io: TableIO, val runId: String,
                              val resume: Boolean = false, seed: String = "cp")
@@ -101,6 +101,18 @@ final class CurationPipeline(val io: TableIO, val runId: String,
       partitionBy = Seq("split"))
   }
 
+  /** c3 keep rows from the staged signature table: guarded band pairing →
+    * connected components → each cluster's representative. CC state goes
+    * through `stage` (as `c3_cc_*`) only for a pair graph at or above
+    * Dedup's measured peel gate, where a killed run resumes from its last
+    * committed round; below it CC is executor-local and a resume restarts
+    * CC from `c3_minhash_sigs`. */
+  private def nearDupKeep(spark: SparkSession, s2: DataFrame, sigs: DataFrame): DataFrame =
+    stage(spark, "c3_neardup_collapse",
+      Dedup.clustersFor(s2, Dedup.minhashPairsGuardedFromSigs(sigs),
+          (df, name) => stage(spark, s"c3_$name", df))
+        .filter(col("keep") === 1).select(col("doc_id")))
+
   /** `docs`: (doc_id, text, lang, source). Returns the packed keep set
     * (read back from the sink), one row per surviving document with its
     * split and pack assignment. */
@@ -111,7 +123,6 @@ final class CurationPipeline(val io: TableIO, val runId: String,
           evalDocs: Option[DataFrame] = None, decontamMinHits: Long = 1L,
           trainUpper256: Int = 236, valUpper256: Int = 246,
           packBudget: Int = 1024, packShards: Int = 32,
-          durableSignatures: Boolean = false,
           stripSpanTokens: Int = 0, stripSpanStride: Int = 0): DataFrame = {
     // Folded into every lineage row: resume refuses (loudly) to reuse a
     // checkpoint computed under different thresholds/langs/budgets.
@@ -168,27 +179,12 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     }
 
     // c3: near-dup cluster collapse — banded MinHash-LSH signatures (the
-    // per-byte half) → guarded band pairing → connected components → keep
-    // only each cluster's representative (pairwise dropping cannot dedup an
-    // N-way duplicate group).
-    // `durableSignatures` picks how the signature table materializes:
-    // localCheckpoint (default — executor memory+disk, fastest; 90 vs 115 s
-    // at 2M docs/32 cores) or a real TableIO stage (survives executor loss,
-    // resumes, and is the delta-mode composition base — the right setting on
-    // a 1000-executor cluster). Under durableSignatures the CC rounds also
-    // checkpoint through TableIO (deterministic round names) so a run killed
-    // mid-iteration resumes from its last committed round.
-    val sigs =
-      if (durableSignatures) stage(spark, "c3_minhash_sigs",
-        Dedup.bandSignaturesFor(surviving(s2)))
-      else Dedup.bandSignaturesFor(surviving(s2)).localCheckpoint()
-    val ccMaterialize: (DataFrame, String) => DataFrame =
-      if (durableSignatures) (df, name) => stage(spark, s"c3_$name", df)
-      else (df, _) => df.localCheckpoint()
-    val s3 = stage(spark, "c3_neardup_collapse",
-      Dedup.clustersFor(s2, Dedup.minhashPairsGuardedFromSigs(sigs),
-          ccMaterialize = ccMaterialize)
-        .filter(col("keep") === 1).select(col("doc_id")))
+    // per-byte half, staged: a resume and the next delta run read them) →
+    // guarded band pairing → connected components → keep only each
+    // cluster's representative (pairwise dropping cannot dedup an N-way
+    // duplicate group).
+    val sigs = stage(spark, "c3_minhash_sigs", Dedup.bandSignaturesFor(surviving(s2)))
+    val s3 = nearDupKeep(spark, s2, sigs)
 
     // c4: benchmark decontamination (skipped when no eval set is supplied);
     // the COMPLETE per-doc hit table is its own stage — the per-byte half —
@@ -229,11 +225,12 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * (a deleted first occurrence promotes a recurrence elsewhere) count as
     * changed for every downstream text stage — their effective text changed.
     *
-    * Requirements on the base run: same parameters, `durableSignatures=true`
-    * (the signature table is the composition base; delta runs always write
-    * it). On parquet the composed stages rewrite survivor rows (measured
-    * slower than full at sandbox scale, like the KG delta); on Iceberg those
-    * composed commits are metadata-only and only churn-sized data moves. */
+    * Requirements on the base run: same parameters. Any completed [[run]]
+    * or delta run is a valid base: both stage the signature table
+    * (`c3_minhash_sigs`), the composition base of c3. On parquet the
+    * composed stages rewrite survivor rows (measured slower than full at
+    * sandbox scale, like the KG delta); on Iceberg those composed commits
+    * are metadata-only and only churn-sized data moves. */
   def runDelta(spark: SparkSession, cur: DataFrame, prevIo: TableIO,
                langs: Seq[String] = Seq("en", "de", "es", "fr", "zh"),
                minQualityPpm: Long = 400000L, minAlphaPpm: Long = 500000L,
@@ -254,7 +251,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
       case _ => require(io ne prevIo, "delta run must not write into prevIo")
     }
     require(prevIo.exists(spark, "c3_minhash_sigs"),
-      "delta needs the previous run's signature table — run the base with durableSignatures=true")
+      "delta needs the previous run's c3_minhash_sigs table (every run and delta run writes it)")
 
     // d0: change detection — one content-hash pass over the current corpus
     // (on Iceberg the changed/stale key sets come from snapshot-diff
@@ -363,10 +360,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     val sigs = stage(spark, "c3_minhash_sigs",
       composePerDoc(prevIo.read(spark, "c3_minhash_sigs"), invalid, s2,
         missing => Dedup.bandSignaturesFor(textOf(missing))))
-    val s3 = stage(spark, "c3_neardup_collapse",
-      Dedup.clustersFor(s2, Dedup.minhashPairsGuardedFromSigs(sigs),
-          ccMaterialize = (df, name) => stage(spark, s"c3_$name", df))
-        .filter(col("keep") === 1).select(col("doc_id")))
+    val s3 = nearDupKeep(spark, s2, sigs)
 
     // c4 composed: contamination is per-doc vs the (assumed-unchanged) eval
     // set — the complete hit rows compose; the keep decision re-derives
@@ -469,7 +463,7 @@ object CurationPipeline {
         case Some(prev) =>
           pipe.runDelta(spark, docs, new ParquetTableIO(prev), evalDocs = evalSet)
         case None =>
-          pipe.run(spark, docs, evalDocs = evalSet, durableSignatures = true)
+          pipe.run(spark, docs, evalDocs = evalSet)
       }
       val n = out.count()
       val sec = (System.nanoTime() - t0) / 1e9

@@ -181,22 +181,21 @@ object Dedup {
     * cap ON by default, and the exclusions MEASURED per run (mirroring
     * kg.Candidates' hot-key measurement) — the count and worst sizes of
     * excluded buckets are printed so a capped run can never silently read as
-    * full coverage. The signature table is materialized once and shared by
-    * the guard measurement and the pair join, instead of recomputing
-    * minhashes twice. `materialize` defaults to `localCheckpoint`
-    * (executor memory+disk — it visibly spilled at 8M docs on an 8g heap);
-    * a checkpointed pipeline passes its own stage writer instead
-    * (CurationPipeline materializes through TableIO, which also makes the
-    * signature table resumable).
+    * full coverage. The signature table is materialized once (executor-local,
+    * `localCheckpoint` — it visibly spilled at 8M docs on an 8g heap) and
+    * shared by the guard measurement and the pair join, instead of
+    * recomputing minhashes twice. A checkpointed pipeline stages its own
+    * signature table and calls [[minhashPairsGuardedFromSigs]] instead
+    * (CurationPipeline's `c3_minhash_sigs`, which resumes and is the delta
+    * composition base).
     *
     * NOTE: CONSTRUCTING this DataFrame runs real Spark jobs (the signature
     * materialization and the guard measurement are driver actions) — that is
     * the point of the guarded path. Plan-only consumers should use
     * [[minhashPairsFor]] with the same cap, which is semantically identical
     * and fully lazy. */
-  def minhashPairsGuarded(docs: DataFrame, maxBucket: Int = DefaultMaxBucket,
-                          materialize: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
-    minhashPairsGuardedFromSigs(materialize(bandSignaturesFor(docs)), maxBucket)
+  def minhashPairsGuarded(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
+    minhashPairsGuardedFromSigs(bandSignaturesFor(docs).localCheckpoint(), maxBucket)
 
   /** The guarded pair join over an already-materialized (or composed —
     * delta mode) signature table: measures + logs what the cap excluded,
@@ -328,11 +327,12 @@ object Dedup {
     ngramJaccardFor(Tables.documents(spark, dir))
 
   def ngramJaccardFor(docs: DataFrame): DataFrame = {
-    // the distinct shingle-set table is read five times (per-doc counts,
-    // both intersection sides and both sides of the signature self-join in
-    // pairsFromSigs) and the candidate pairs twice — materialize each so the
-    // shingle/minhash towers compute once per run, not per reference (the
-    // pair set is the tiny post-LSH survivor table).
+    // the distinct shingle-set table is read four times (per-doc counts,
+    // both intersection sides and the signature derivation), the signature
+    // table twice (both sides of the self-join in pairsFromSigs) and the
+    // candidate pairs twice — materialize each so the shingle and
+    // minhash/band towers compute once per run, not per reference (the pair
+    // set is the tiny post-LSH survivor table).
     val sets = shinglesFor(docs).select(col("doc_id"), col("shingle")).distinct()
       .localCheckpoint()
     val counts = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -341,7 +341,7 @@ object Dedup {
     // are identical to minhashPairsFor(docs) — without scanning and
     // shingling the corpus a second time (equivalence property-tested in
     // DedupSimilaritySpec; at 100 TB this halves the stage's corpus passes).
-    val pairs = pairsFromSigs(bandSignaturesFromShingles(sets), Int.MaxValue)
+    val pairs = pairsFromSigs(bandSignaturesFromShingles(sets).localCheckpoint(), Int.MaxValue)
       .localCheckpoint()
     val inter = pairs
       .join(sets.as("x"), col("d1") === col("x.doc_id"))
@@ -366,53 +366,59 @@ object Dedup {
     * driver-side graph state, every round is joins + a min aggregation. The
     * jump halves the distance to each component's minimum every round, so
     * convergence is O(log diameter) rounds, not O(diameter) — the same
-    * doubling idea as the large-star/small-star CC algorithm, which is what
-    * a 10^12-edge deployment would checkpoint per round.
+    * doubling idea as the large-star/small-star CC algorithm. A graph that
+    * has not converged after 25 rounds fails loudly.
     *
-    * `materialize(df, name)` truncates each round's lineage so plans stay
-    * constant-size. The default is `localCheckpoint` (executor memory+disk —
-    * fastest, but one lost executor mid-iteration invalidates its blocks and
-    * fails the stage); a checkpointed pipeline passes its stage writer
-    * instead (CurationPipeline under `durableSignatures=true` routes every
-    * round through TableIO), which makes each ROUND resumable: a run killed
-    * mid-iteration restarts from its last committed round, not from the
-    * edge list. Round names are deterministic (`cc_edges`, `cc_round_N`).
+    * Materialization rule, decided by ONE measured size — the doubled edge
+    * table's row count against `peelThreshold`:
+    *  - below it the fixpoint is job-overhead-bound: every table is
+    *    executor-local (`localCheckpoint`), nothing is peeled, and each
+    *    round's propagate result stays lazy (replaying the tiny propagate
+    *    join twice is cheaper than an extra materialization job per round).
+    *    A caller that lost this state restarts CC from its input pairs.
+    *  - at or above it, every CC table (`cc_edges`, `cc_deg`,
+    *    `cc_core_edges`, `cc_round_N`, `cc_prop_N`, `cc_members`; names
+    *    are deterministic) goes through `materialize`. The default is
+    *    executor-local; a checkpointed pipeline passes its stage writer
+    *    (CurationPipeline's `stage`), which makes every ROUND resumable — a
+    *    run killed mid-iteration restarts from its last committed round —
+    *    and survives lost executor blocks.
     *
-    * Degree-1 peeling (measured-size gated): when the doubled edge table has
-    * at least `peelThreshold` rows, leaves (nodes with exactly one incident
+    * Degree-1 peeling (same gate): leaves (nodes with exactly one incident
     * edge) are split off BEFORE the fixpoint — the rounds then run over the
     * core subgraph only, and the leaves re-attach afterwards with one join
     * plus a component-min resolution (exact: the final label is the minimum
     * over ALL members, so a leaf can still be its component's minimum). On
     * leaf-heavy graphs — the KG edge table is 90% degree-1 order nodes, and
     * a near-dup pair graph is mostly isolated pairs — this shrinks every
-    * round's propagate join by the leaf fraction. Below the threshold the
-    * fixpoint is overhead-bound, so the 3 extra passes would cost more than
-    * they save (the measured-size-switch discipline of kg.Candidates).
+    * round's propagate join by the leaf fraction. Below the gate the 3 extra
+    * passes would cost more than they save (the measured-size-switch
+    * discipline of kg.Candidates).
     *
     * Returns (doc_id, cluster) for every doc that appears in ≥1 pair;
     * cluster = the component's minimum doc_id (deterministic). */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 25,
-      checkEvery: Int = 2,
-      materialize: (DataFrame, String) => DataFrame =
-        (df, _) => df.localCheckpoint(),
+  def connectedComponents(pairs: DataFrame,
+      materialize: (DataFrame, String) => DataFrame = executorLocal,
       peelThreshold: Long = 100000L): DataFrame = {
-    require(checkEvery >= 1, "checkEvery must be >= 1")
-    val edges = materialize(
-      pairs.select(col("d1").as("a"), col("d2").as("b"))
-        .union(pairs.select(col("d2").as("a"), col("d1").as("b"))), "cc_edges")
-    // below the gate the per-round data is job-overhead-bound: skip peeling
-    // AND the prop-table materialization (replaying the tiny propagate join
-    // twice is cheaper than an extra materialization job per round)
-    if (edges.count() >= peelThreshold) ccPeeled(edges, maxIters, materialize)
-    else ccFixpoint(edges, edges.select(col("a").as("v")).distinct(),
-                    maxIters, materialize, materializeProp = false)
+    // measured on an executor-local copy, so the pair join runs once; above
+    // the gate `materialize` takes the copy over
+    val edges = pairs.select(col("d1").as("a"), col("d2").as("b"))
+      .union(pairs.select(col("d2").as("a"), col("d1").as("b"))).localCheckpoint()
+    if (edges.count() >= peelThreshold) ccPeeled(materialize(edges, "cc_edges"), materialize)
+    else ccFixpoint(edges, edges.select(col("a").as("v")).distinct(), None)
       .select(col("v").as("doc_id"), col("l").as("cluster"))
   }
 
+  /** Round bound of the CC fixpoint: pointer jumping converges in
+    * O(log diameter) rounds, so 25 covers any diameter a real graph has. */
+  private val MaxCcRounds = 25
+
+  /** The default CC materializer: executor-local lineage truncation. */
+  private val executorLocal: (DataFrame, String) => DataFrame = (df, _) => df.localCheckpoint()
+
   /** Leaf-peeled CC (see [[connectedComponents]]): fixpoint over the core
     * subgraph, then exact leaf re-attachment + component-min resolution. */
-  private def ccPeeled(edges: DataFrame, maxIters: Int,
+  private def ccPeeled(edges: DataFrame,
       materialize: (DataFrame, String) => DataFrame): DataFrame = {
     // multiset degree over the doubled table: the a-side covers every
     // endpoint once per incident edge, so deg == 1 ⟺ exactly one edge
@@ -432,7 +438,7 @@ object Dedup {
            .join(leaves.hint("shuffle_hash"), col("b") === col("leaf"), "left_anti"),
       "cc_core_edges")
     val coreNodes = deg.filter(col("deg") > 1).select(col("a").as("v"))
-    val coreLab = ccFixpoint(core, coreNodes, maxIters, materialize)
+    val coreLab = ccFixpoint(core, coreNodes, Some(materialize))
     // leaf label: the neighbour's core label; a leaf whose neighbour is
     // itself a leaf is one half of an isolated pair — label = the pair min
     val leafPre = leafEdge
@@ -450,17 +456,15 @@ object Dedup {
 
   /** The min-label + pointer-jump fixpoint over `edges`, starting from
     * identity labels on `nodes`; returns the converged (v, l) table.
-    * `materializeProp = false` leaves each round's propagate result lazy
-    * (recomputed by both pointer-jump sides) — right for tiny graphs where
-    * a materialization job costs more than the duplicated join. */
-  private def ccFixpoint(edges: DataFrame, nodes: DataFrame, maxIters: Int,
-      materialize: (DataFrame, String) => DataFrame,
-      materializeProp: Boolean = true): DataFrame = {
-    var labels = materialize(
-      nodes.select(col("v"), col("v").as("l")), "cc_round_0")
+    * `materialize` is None below the peel gate (see [[connectedComponents]]):
+    * rounds are then executor-local and each propagate result stays lazy. */
+  private def ccFixpoint(edges: DataFrame, nodes: DataFrame,
+      materialize: Option[(DataFrame, String) => DataFrame]): DataFrame = {
+    val round = materialize.getOrElse(executorLocal)
+    var labels = round(nodes.select(col("v"), col("v").as("l")), "cc_round_0")
     var converged = false
     var i = 0
-    while (!converged && i < maxIters) {
+    while (!converged && i < MaxCcRounds) {
       // propagate: l(v) ← min(l(v), min over neighbours u of l(u)).
       // `prop` is BOTH sides of the pointer-jump self-join below, and the two
       // sides shuffle on different keys (x.l vs v2), so without
@@ -471,14 +475,13 @@ object Dedup {
                     col("v") === col("b"), "left_outer")
           .select(col("v"), least(col("l"), coalesce(col("nl"), col("l"))).as("l"),
                   col("l").as("lold"))
-      val prop = if (materializeProp) materialize(prop0, s"cc_prop_${i + 1}") else prop0
+      val prop = materialize.fold(prop0)(_(prop0, s"cc_prop_${i + 1}"))
       // pointer jump: l(v) ← l(l(v)) — labels only ever decrease, so chasing
       // one hop toward the minimum is always sound and doubles the reach.
       // chg marks rows whose label decreased this round (propagate or jump):
       // convergence is then a filter over the materialized round table —
-      // checked EVERY round for free, instead of the old separate
-      // next ⋈ labels comparison join every checkEvery rounds.
-      val next = materialize(prop.as("x")
+      // checked EVERY round for free, with no comparison join.
+      val next = round(prop.as("x")
         .join(prop.select(col("v").as("v2"), col("l").as("l2")).hint("shuffle_hash").as("y"),
               col("x.l") === col("y.v2"), "left_outer")
         .select(col("x.v").as("v"),
@@ -490,7 +493,7 @@ object Dedup {
       labels = next.select(col("v"), col("l"))
       i += 1
     }
-    require(converged, s"connected components did not converge in $maxIters rounds")
+    require(converged, s"connected components did not converge in $MaxCcRounds rounds")
     labels
   }
 
@@ -508,9 +511,8 @@ object Dedup {
     * keep=0 rows removes every redundant copy of an N-way duplicate group
     * while keeping exactly one. */
   def clustersFor(docs: DataFrame, pairs: DataFrame,
-      ccMaterialize: (DataFrame, String) => DataFrame =
-        (df, _) => df.localCheckpoint()): DataFrame = {
-    val cc = connectedComponents(pairs, materialize = ccMaterialize)
+      materialize: (DataFrame, String) => DataFrame = executorLocal): DataFrame = {
+    val cc = connectedComponents(pairs, materialize)
     docs.select(col("doc_id"))
       .join(cc, Seq("doc_id"), "left_outer")
       .select(col("doc_id"),

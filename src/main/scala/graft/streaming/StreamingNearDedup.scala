@@ -7,10 +7,10 @@ import graft.ops.Dedup
 /** Streaming NEAR-dup filtering against a static signature index — the
   * production split of near-dedup across batch and stream: the nightly batch
   * funnel consolidates the corpus and publishes its MinHash-LSH band
-  * signature table (`Dedup.bandSignaturesFor`, already a checkpointed stage
-  * of the curation pipeline); the intra-day ingest stream then drops any
-  * arriving document that LSH-collides with the existing corpus before it is
-  * stored or processed further.
+  * signature table (`Dedup.bandSignaturesFor`, the curation pipeline's
+  * checkpointed `c3_minhash_sigs` stage); the intra-day ingest stream then
+  * drops any arriving document that LSH-collides with the existing corpus
+  * before it is stored or processed further.
   *
   * Why this shape: true streaming near-dedup (stream-vs-stream) needs a
   * stateful any-of-k-bands match — per-band dedup state PLUS a per-doc vote,

@@ -69,8 +69,7 @@ class CurationDeltaSpec extends AnyFunSuite {
                       strip: Int = 0): (ParquetTableIO, Seq[String]) = {
     val io = new ParquetTableIO(Files.createTempDirectory(s"cdelta_$tag").toString)
     val out = new CurationPipeline(io, s"full-$tag")
-      .run(spark, df(rows), evalDocs = Some(evalSet), durableSignatures = true,
-           stripSpanTokens = strip)
+      .run(spark, df(rows), evalDocs = Some(evalSet), stripSpanTokens = strip)
       .orderBy("doc_id").collect().map(_.toString).toSeq
     (io, out)
   }

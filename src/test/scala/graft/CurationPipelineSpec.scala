@@ -140,66 +140,47 @@ class CurationPipelineSpec extends AnyFunSuite {
       .select("text").as[String].collect()(0).contains("CHANGED"))
   }
 
+  private def runWith(io: ParquetTableIO, runId: String, resume: Boolean): Seq[String] =
+    new CurationPipeline(io, runId, resume)
+      .run(spark, corpus, evalDocs = Some(evalSet))
+      .orderBy("doc_id").collect().map(_.toString).toSeq
+
   test("resume: killing after c3 and resuming reproduces the identical output") {
-    val dir = Files.createTempDirectory("graft_curation_resume").toString
-    val io = new ParquetTableIO(dir)
-    def run(resume: Boolean) =
-      new CurationPipeline(io, "t2", resume)
-        .run(spark, corpus, evalDocs = Some(evalSet), durableSignatures = true)
-        .orderBy("doc_id").collect().map(_.toString).toSeq
-    val first = run(resume = false)
-    // durableSignatures routes every CC round through TableIO: verify the
-    // rounds are on disk, then kill ACROSS a round boundary (drop the last
-    // committed round and everything after) — resume must pick up from the
-    // surviving rounds and reproduce the identical output
-    val ccRounds = io.list(spark, "").filter(_.startsWith("c3_cc_round_"))
-    assert(ccRounds.size >= 2, s"expected durable CC rounds, got $ccRounds")
-    val lastRound = ccRounds.map(_.stripPrefix("c3_cc_round_").toInt).max
-    io.drop(spark, s"c3_cc_round_$lastRound")
+    val io = new ParquetTableIO(Files.createTempDirectory("graft_curation_resume").toString)
+    val first = runWith(io, "t2", resume = false)
     io.drop(spark, "c3_neardup_collapse")
     io.drop(spark, "c4_decontaminated"); io.drop(spark, "c5_redacted"); io.drop(spark, "c6_packed")
-    assert(run(resume = true) == first && first.nonEmpty)
+    assert(runWith(io, "t2", resume = true) == first && first.nonEmpty)
   }
 
-  test("mid-CC kill: resume restarts from the last committed round, not the edge list") {
-    class CountingIO(root: String) extends ParquetTableIO(root) {
-      val written = scala.collection.mutable.ArrayBuffer[String]()
-      override def write(df: org.apache.spark.sql.DataFrame, table: String,
-                         partitionBy: Seq[String] = Nil): Unit = {
-        written += table; super.write(df, table, partitionBy)
-      }
-    }
-    class KillAt(root: String, table: String) extends CountingIO(root) {
+  test("lost executor blocks: the run fails loudly, resume recomputes c3 from the staged signatures") {
+    // every executor-local (localCheckpoint) block is gone by the time c3's
+    // keep set is written — what a lost executor does to a running job
+    class LosesBlocksBefore(root: String, table: String) extends CountingIO(root) {
       override def write(df: org.apache.spark.sql.DataFrame, t: String,
                          partitionBy: Seq[String] = Nil): Unit = {
-        if (t == table) throw new RuntimeException(s"injected kill before $t")
+        if (t == table)
+          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
         super.write(df, t, partitionBy)
       }
     }
-    def runWith(io: ParquetTableIO, resume: Boolean) =
-      new CurationPipeline(io, "t3", resume)
-        .run(spark, corpus, evalDocs = Some(evalSet), durableSignatures = true)
-        .orderBy("doc_id").collect().map(_.toString).toSeq
+    val golden = runWith(new ParquetTableIO(Files.createTempDirectory("lost_gold").toString),
+                         "t3", resume = false)
 
-    val goldenIo = new CountingIO(Files.createTempDirectory("cc_kill_gold").toString)
-    val golden = runWith(goldenIo, resume = false)
+    val dir = Files.createTempDirectory("lost_blocks").toString
+    val e = intercept[Exception](
+      runWith(new LosesBlocksBefore(dir, "c3_neardup_collapse"), "t3", resume = false))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("Checkpoint block") && m.contains("not found")),
+      messages.mkString("\n"))
+    assert(new ParquetTableIO(dir).exists(spark, "c3_minhash_sigs"),
+      "the signature table must be staged before CC runs")
 
-    // kill BETWEEN CC round commits: cc_edges + cc_round_0 land, round 1 dies
-    val dir = Files.createTempDirectory("cc_kill").toString
-    val e = intercept[RuntimeException](runWith(new KillAt(dir, "c3_cc_round_1"), resume = false))
-    assert(e.getMessage.contains("c3_cc_round_1"))
-    val onDisk = new ParquetTableIO(dir)
-    assert(onDisk.exists(spark, "c3_cc_edges") && onDisk.exists(spark, "c3_cc_round_0"))
-
-    // resume: byte-identical clusters, and the committed rounds are READ,
-    // not re-executed — only the killed round onward (and the stages after
-    // CC) are recomputed
     val resumeIo = new CountingIO(dir)
-    assert(runWith(resumeIo, resume = true) == golden && golden.nonEmpty)
-    assert(resumeIo.written.contains("c3_cc_round_1"))
-    for (t <- Seq("c3_cc_edges", "c3_cc_round_0", "c3_minhash_sigs"))
+    assert(runWith(resumeIo, "t3", resume = true) == golden && golden.nonEmpty)
+    assert(resumeIo.written.contains("c3_neardup_collapse"))
+    for (t <- Seq("c0_ingest", "c1_quality", "c2_exact_dedup", "c3_minhash_sigs"))
       assert(!resumeIo.written.contains(t), s"$t re-executed on resume: ${resumeIo.written}")
-    assert(resumeIo.written.size < goldenIo.written.size,
-      s"resume re-ran everything: ${resumeIo.written.size} vs fresh ${goldenIo.written.size}")
   }
 }

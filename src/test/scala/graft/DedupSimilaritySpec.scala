@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.io.{ParquetTableIO, StagedRun, TableIO}
 import graft.ops.{Dedup, Similarity}
+import java.nio.file.Files
 
 /** Near-dup discovery quality gates:
   *  - LSH→Jaccard funnel: every planted near-dup pair survives
@@ -131,24 +133,79 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(cc.size == 41 && cc.values.forall(_ == 0L), s"chain did not collapse: $cc")
   }
 
+  // a graph exercising every peel case: a chain whose ends are leaves and
+  // whose minimum IS a leaf (0-1-2), an isolated pair (10,11), a 3-path
+  // whose middle is an isolated CORE node after peeling (20-21-22), a
+  // triangle with a pendant leaf (30,31,32 + 33), and a star (40 + leaves)
+  private lazy val peelPairs = Seq(
+    (0L, 1L), (1L, 2L),
+    (10L, 11L),
+    (20L, 21L), (21L, 22L),
+    (30L, 31L), (31L, 32L), (30L, 32L), (32L, 33L),
+    (40L, 41L), (40L, 42L), (40L, 43L)).toDF("d1", "d2")
+
+  private def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("cluster collapse: leaf peeling is exact on every leaf shape") {
-    // a graph exercising every peel case: a chain whose ends are leaves and
-    // whose minimum IS a leaf (0-1-2), an isolated pair (10,11), a 3-path
-    // whose middle is an isolated CORE node after peeling (20-21-22), a
-    // triangle with a pendant leaf (30,31,32 + 33), and a star (40 + leaves)
-    val pairs = Seq(
-      (0L, 1L), (1L, 2L),
-      (10L, 11L),
-      (20L, 21L), (21L, 22L),
-      (30L, 31L), (31L, 32L), (30L, 32L), (32L, 33L),
-      (40L, 41L), (40L, 42L), (40L, 43L)).toDF("d1", "d2")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val unpeeled = asMap(Dedup.connectedComponents(pairs))
-    val peeled = asMap(Dedup.connectedComponents(pairs, peelThreshold = 0L))
+    val unpeeled = asMap(Dedup.connectedComponents(peelPairs))
+    val peeled = asMap(Dedup.connectedComponents(peelPairs, peelThreshold = 0L))
     assert(peeled == unpeeled, s"peeled=$peeled unpeeled=$unpeeled")
     assert(peeled(2L) == 0L && peeled(11L) == 10L && peeled(22L) == 20L &&
            peeled(33L) == 30L && peeled(43L) == 40L)
+  }
+
+  /** CC of [[peelPairs]] above the peel gate, every CC table staged through
+    * a [[StagedRun]] on `stageIo` (the CurationPipeline wiring). */
+  private def stagedCC(stageIo: TableIO, resume0: Boolean): Map[Long, Long] = {
+    val run = new StagedRun {
+      def io = stageIo; def runId = "cc"; def resume = resume0
+    }
+    asMap(Dedup.connectedComponents(peelPairs,
+      (df, name) => run.stage(spark, name, df), peelThreshold = 0L))
+  }
+
+  test("staged CC rounds: drop the last committed round, resume reproduces the output") {
+    val io = new ParquetTableIO(Files.createTempDirectory("cc_staged").toString)
+    val first = stagedCC(io, resume0 = false)
+    assert(first == asMap(Dedup.connectedComponents(peelPairs)))
+    // kill ACROSS a round boundary: drop the last committed round and
+    // everything after it — resume picks up from the surviving rounds
+    val ccRounds = io.list(spark, "").filter(_.startsWith("cc_round_"))
+    assert(ccRounds.size >= 2, s"expected staged CC rounds, got $ccRounds")
+    val lastRound = ccRounds.map(_.stripPrefix("cc_round_").toInt).max
+    io.drop(spark, s"cc_round_$lastRound")
+    io.drop(spark, "cc_members")
+    assert(stagedCC(io, resume0 = true) == first && first.nonEmpty)
+  }
+
+  test("mid-CC kill: resume restarts from the last committed round") {
+    class KillAt(root: String, table: String) extends CountingIO(root) {
+      override def write(df: org.apache.spark.sql.DataFrame, t: String,
+                         partitionBy: Seq[String] = Nil): Unit = {
+        if (t == table) throw new RuntimeException(s"injected kill before $t")
+        super.write(df, t, partitionBy)
+      }
+    }
+    val goldenIo = new CountingIO(Files.createTempDirectory("cc_kill_gold").toString)
+    val golden = stagedCC(goldenIo, resume0 = false)
+
+    // kill BETWEEN CC round commits: cc_edges + cc_round_0 land, round 1 dies
+    val dir = Files.createTempDirectory("cc_kill").toString
+    val e = intercept[RuntimeException](stagedCC(new KillAt(dir, "cc_round_1"), resume0 = false))
+    assert(e.getMessage.contains("cc_round_1"))
+    val onDisk = new ParquetTableIO(dir)
+    assert(onDisk.exists(spark, "cc_edges") && onDisk.exists(spark, "cc_round_0"))
+
+    // resume: identical clusters, and the committed rounds are READ, not
+    // re-executed — only the killed round onward is recomputed
+    val resumeIo = new CountingIO(dir)
+    assert(stagedCC(resumeIo, resume0 = true) == golden && golden.nonEmpty)
+    assert(resumeIo.written.contains("cc_round_1"))
+    for (t <- Seq("cc_edges", "cc_round_0"))
+      assert(!resumeIo.written.contains(t), s"$t re-executed on resume: ${resumeIo.written}")
+    assert(resumeIo.written.size < goldenIo.written.size,
+      s"resume re-ran everything: ${resumeIo.written.size} vs fresh ${goldenIo.written.size}")
   }
 
   test("cluster collapse end-to-end: planted near-dups drop, all else kept") {

@@ -117,7 +117,10 @@ object Oracle {
       val pred = m.kind match {
         case "import" => "imports"; case "doccomment" => "documents"; case _ => "mentions"
       }
-      (s"code:${m.repo}/${m.path}@${m.commit}#L${m.line}", pred, s"kb:$e")
+      def esc(field: String, sep: String, code: String) =
+        field.replace("%", "%25").replace(sep, code)
+      (s"code:${esc(m.repo, "/", "%2F")}/${esc(m.path, "@", "%40")}@" +
+        s"${esc(m.commit, "#", "%23")}#L${m.line}", pred, s"kb:$e")
     }.toSet
   }
 }

@@ -77,4 +77,20 @@ class ScoringSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("norm"), r.getAs[Long]("entity_id"), r.getAs[Double]("conf"))).toSet
     assert(v == Set(("x", 1L, 0.666667), ("y", 4L, 0.5)))
   }
+
+  test("S5: subjects stay distinct when a separator moves between key fields") {
+    // (repo a, path b/c) vs (repo a/b, path c), and (path p@q, commit c1) vs
+    // (path p, commit q@c1): four natural keys, four subjects — in the
+    // emitted triples and in the gold key space alike
+    val keys = Seq(("a", "b/c", "c1"), ("a/b", "c", "c1"), ("r", "p@q", "c1"), ("r", "p", "q@c1"))
+    val canonical = keys.map { case (r, p, c) => (r, p, c, 3, "ident", 7L, 1.0) }
+      .toDF("repo", "path", "commit", "line", "kind", "entity_id", "conf")
+    val emitted = Canonicalize.triples(canonical)
+    val subj = emitted.select("subj").as[String].collect()
+    assert(subj.distinct.length == keys.size, subj.mkString(", "))
+    val gold = keys.map { case (r, p, c) => (r, p, c, 3, "ident", "x", 7L) }
+      .toDF("repo", "path", "commit", "line", "kind", "surface", "entity_id")
+    val pr = Eval.precisionRecall(emitted, gold).collect()(0)
+    assert(pr.getAs[Long]("gold_cnt") == keys.size && pr.getAs[Long]("matched") == keys.size)
+  }
 }
