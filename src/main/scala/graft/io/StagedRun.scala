@@ -31,6 +31,17 @@ trait StagedRun {
     Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(
       parts.map(String.valueOf).mkString("|")))
 
+  /** A delta run plans lazy reads of `prevIo` and then writes its own stages,
+    * so it must never write into the checkpoint dir it reads (at best a
+    * FileNotFound, at worst an empty delta). */
+  protected def requireDistinctBase(prevIo: TableIO): Unit =
+    (io, prevIo) match {
+      case (a: ParquetTableIO, b: ParquetTableIO) =>
+        require(a.root != b.root,
+          s"delta run must write to a different checkpoint dir than prevIo (${a.root})")
+      case _ => require(io ne prevIo, "delta run must not write into prevIo")
+    }
+
   /** A stage is resumable only when the lineage row was committed by THE SAME
     * run_id AND under the same parameter hash — a checkpoint dir written by a
     * different run (a different corpus size) or by this runId with different

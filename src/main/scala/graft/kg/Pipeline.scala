@@ -17,26 +17,20 @@ import graft.io.{ParquetTableIO, TableIO}
   */
 final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = false)
     extends graft.io.StagedRun {
+  import Pipeline._
 
   /** Full run. Returns the triples DataFrame (read back from the sink). */
   def run(spark: SparkSession, src: DataFrame, kb: DataFrame, kbCtx: DataFrame,
           snapshot: Option[DataFrame] = None,
-          k: Int = 2, saltR: Int = 8, hotThreshold: Long = 10000L,
+          hotThreshold: Long = 10000L,
           broadcastDictMaxRows: Long = 1000000L,
-          broadcastKbCtxMaxRows: Long = 10000000L,
-          broadcastKbTermsMaxRows: Long = 5000000L): DataFrame = {
-    stageParams = paramsHash(k, saltR, hotThreshold)
+          broadcastKbCtxMaxRows: Long = 10000000L): DataFrame = {
+    stageParams = paramsHash(hotThreshold)
 
     // Stage 0: ingest + per-row sha256 invariant vs the source snapshot (F3/J7)
     val files = stage(spark, "stage0_files",
       src.withColumn("sha256", sha2(col("content"), 256)), Seq("lang"))
-    snapshot.foreach { snap =>
-      val mismatches = files.select(col("repo"), col("path"), col("commit"), col("sha256"))
-        .join(snap.withColumnRenamed("sha256", "sha_expected"), Seq("repo", "path", "commit"))
-        .filter(col("sha256") =!= col("sha_expected"))
-        .count()
-      require(mismatches == 0, s"sha256 invariant violated: $mismatches rows")
-    }
+    requireShasMatch(files, snapshot, "")
     // Compact (key, sha) table — what the NEXT run's delta mode diffs against
     // (so change detection never has to re-read this run's content column).
     stage(spark, "stage0_shas",
@@ -46,7 +40,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     // (mention structs + context); mention rows derive from it narrowly and
     // contexts are a pruned read of the same checkpoint (stored once per
     // line, not duplicated per mention).
-    val perLine = stage(spark, "stage1_lines", Extract.perLine(files, k))
+    val perLine = stage(spark, "stage1_lines", Extract.perLine(files, K))
     val mentions = stage(spark, "stage1_mentions", Extract.mentionsFromLines(perLine))
     val contexts = Extract.contexts(perLine)
 
@@ -55,11 +49,22 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val dictRows = dict.count()
     val cands = stage(spark, "stage2_candidates",
       Candidates.candidates(mentions, dict, broadcastDict = dictRows <= broadcastDictMaxRows,
-                            saltR = saltR, hotThreshold = hotThreshold))
+                            saltR = SaltR, hotThreshold = hotThreshold))
 
-    linkAndMaterialize(spark, mentions, cands, contexts, kbCtx,
-      broadcastKbCtxMaxRows, broadcastKbTermsMaxRows)
+    linkAndMaterialize(spark, mentions, cands, contexts, kbCtx, broadcastKbCtxMaxRows)
   }
+
+  /** The per-row sha256 invariant of `files` against the source `snapshot`
+    * (when one is given); `scope` names the checked rows in the message. */
+  private def requireShasMatch(files: DataFrame, snapshot: Option[DataFrame],
+                               scope: String): Unit =
+    snapshot.foreach { snap =>
+      val mismatches = files.select(col("repo"), col("path"), col("commit"), col("sha256"))
+        .join(snap.withColumnRenamed("sha256", "sha_expected"), Delta.FileKey)
+        .filter(col("sha256") =!= col("sha_expected"))
+        .count()
+      require(mismatches == 0, s"sha256 invariant violated$scope: $mismatches rows")
+    }
 
   /** Stages 3–4, shared by full and delta runs (these are corpus-GLOBAL —
     * IDF and majority vote see the whole composed corpus, so a delta run's
@@ -71,7 +76,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     * dictionary-join policy. */
   private def linkAndMaterialize(spark: SparkSession, mentions: DataFrame,
       cands: DataFrame, contexts: DataFrame, kbCtx: DataFrame,
-      broadcastKbCtxMaxRows: Long, broadcastKbTermsMaxRows: Long): DataFrame = {
+      broadcastKbCtxMaxRows: Long): DataFrame = {
     // ONE measurement job for both policy decisions (row count for the join
     // strategy, distinct-term count for the vocabulary-prune broadcast — the
     // term set is far smaller than the exploded context table, so it often
@@ -84,7 +89,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val top1 = stage(spark, "stage3_top1",
       Scoring.top1(Scoring.score(mentions, cands, kbCtx, Some(contexts),
         broadcastKbCtx = kbCtxRows <= broadcastKbCtxMaxRows,
-        broadcastKbTerms = kbTermRows <= broadcastKbTermsMaxRows)))
+        broadcastKbTerms = kbTermRows <= BroadcastKbTermsMaxRows)))
 
     // Stage 4: canonicalize + materialize triples, partitioned by predicate
     stage(spark, "stage4_triples",
@@ -110,20 +115,14 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
   def runDelta(spark: SparkSession, cur: DataFrame, kb: DataFrame,
                kbCtx: DataFrame, prevIo: TableIO,
                snapshot: Option[DataFrame] = None,
-               k: Int = 2, saltR: Int = 8, hotThreshold: Long = 10000L,
+               hotThreshold: Long = 10000L,
                broadcastDictMaxRows: Long = 1000000L,
-               broadcastKbCtxMaxRows: Long = 10000000L,
-               broadcastKbTermsMaxRows: Long = 5000000L): DataFrame = {
-    stageParams = paramsHash(k, saltR, hotThreshold, "delta")
-    // Chaining means prev run's dir → NEW dir; writing into the dir being
+               broadcastKbCtxMaxRows: Long = 10000000L): DataFrame = {
+    stageParams = paramsHash(hotThreshold, "delta")
+    // Chaining means prev run's dir → NEW dir: writing into the dir being
     // read would overwrite prev's stage0_shas before the lazily-planned
-    // reads of it execute (at best FileNotFound, at worst an empty delta).
-    (io, prevIo) match {
-      case (a: ParquetTableIO, b: ParquetTableIO) =>
-        require(a.root != b.root,
-          s"delta run must write to a different checkpoint dir than prevIo (${a.root})")
-      case _ => require(io ne prevIo, "delta run must not write into prevIo")
-    }
+    // reads of it execute.
+    requireDistinctBase(prevIo)
     val keyShaCols = (Delta.FileKey :+ "sha256").map(col)
     // Previous corpus fingerprint: the compact (key, sha) table when the
     // previous run wrote one (full and delta runs both do), else derived from
@@ -151,19 +150,13 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val filesDelta = stage(spark, "stage0_files_delta",
       cur.join(changedKeys, Delta.FileKey, "left_semi")
         .withColumn("sha256", sha2(col("content"), 256)))
-    snapshot.foreach { snap =>
-      val mismatches = filesDelta.select(col("repo"), col("path"), col("commit"), col("sha256"))
-        .join(snap.withColumnRenamed("sha256", "sha_expected"), Delta.FileKey)
-        .filter(col("sha256") =!= col("sha_expected"))
-        .count()
-      require(mismatches == 0, s"sha256 invariant violated on delta: $mismatches rows")
-    }
+    requireShasMatch(filesDelta, snapshot, " on delta")
 
     // Stage 1Δ/2Δ: extraction and the candidate join are file-local, so the
     // delta rows are just the stages applied to the changed files; the
     // candidate join's output is per-mention, so strategy differences
     // (hot-key split measured on the delta) cannot change the row set.
-    val perLineDelta  = stage(spark, "stage1_lines_delta", Extract.perLine(filesDelta, k))
+    val perLineDelta  = stage(spark, "stage1_lines_delta", Extract.perLine(filesDelta, K))
     val mentionsDelta = stage(spark, "stage1_mentions_delta",
       Extract.mentionsFromLines(perLineDelta))
     val dict = Candidates.dictionary(kb)
@@ -171,7 +164,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val candsDelta = stage(spark, "stage2_candidates_delta",
       Candidates.candidates(mentionsDelta, dict,
         broadcastDict = dictRows <= broadcastDictMaxRows,
-        saltR = saltR, hotThreshold = hotThreshold))
+        saltR = SaltR, hotThreshold = hotThreshold))
 
     // Composition: previous per-file rows minus stale keys, plus the delta —
     // CHECKPOINTED under the canonical stage names, for two reasons that both
@@ -195,8 +188,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
         .unionByName(candsDelta))
     val contexts = Extract.contexts(perLine)
 
-    linkAndMaterialize(spark, mentions, cands, contexts, kbCtx,
-      broadcastKbCtxMaxRows, broadcastKbTermsMaxRows)
+    linkAndMaterialize(spark, mentions, cands, contexts, kbCtx, broadcastKbCtxMaxRows)
   }
 }
 
@@ -211,6 +203,13 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
   * gold(repo,path,commit,line,kind,surface,entity_id) — which is how a user
   * of the reference points the engine at their own corpus and gold files. */
 object Pipeline {
+  /** Context window (±lines) of extraction. */
+  private val K = 2
+  /** Hot-key salting fan-out of the candidate join. */
+  private val SaltR = 8
+  /** Distinct-term count under which stage 3 broadcasts the KB vocabulary. */
+  private val BroadcastKbTermsMaxRows = 5000000L
+
   def main(args: Array[String]): Unit = {
     val valueFlags = Set("--input", "--kb", "--kbctx", "--gold", "--delta")
     val pos = args.indices

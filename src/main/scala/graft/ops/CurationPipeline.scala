@@ -38,8 +38,9 @@ import graft.io.{ParquetTableIO, TableIO}
   * day over day.
   */
 final class CurationPipeline(val io: TableIO, val runId: String,
-                             val resume: Boolean = false, seed: String = "cp")
+                             val resume: Boolean = false)
     extends graft.io.StagedRun {
+  import CurationPipeline._
 
   // --- per-byte stage bodies (shared by full and delta runs) ------------
 
@@ -50,14 +51,13 @@ final class CurationPipeline(val io: TableIO, val runId: String,
   /** c1 decision rows (doc_id, sha256): language allowlist + heuristic
     * quality gate (integer-ppm metrics; alpha_ppm is the symbol-soup catch —
     * quality_ppm alone scores stopword-free garbage at 500k). */
-  private def qualityKeep(s0: DataFrame, langs: Seq[String], minQualityPpm: Long,
-                          minAlphaPpm: Long, minTokens: Long): DataFrame = {
+  private def qualityKeep(s0: DataFrame): DataFrame = {
     val q = TextAnalysis.qualityFor(s0)
       .select(col("doc_id"), col("n_tokens"), col("quality_ppm"), col("alpha_ppm"))
     s0.select(col("doc_id"), col("lang"), col("sha256")).join(q, Seq("doc_id"))
-      .filter(col("lang").isin(langs: _*) &&
-              col("quality_ppm") >= minQualityPpm &&
-              col("alpha_ppm") >= minAlphaPpm && col("n_tokens") >= minTokens)
+      .filter(col("lang").isin(Langs: _*) &&
+              col("quality_ppm") >= MinQualityPpm &&
+              col("alpha_ppm") >= MinAlphaPpm && col("n_tokens") >= MinTokens)
       .select(col("doc_id"), col("sha256"))
   }
 
@@ -89,13 +89,11 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * source, toks) rows, partitioned by split (the layout a tokenizer
     * consumes). Packing groups by split so a pack never straddles a split
     * boundary — a val doc must not occupy token offsets inside a train pack. */
-  private def packStage(spark: SparkSession, withToks: DataFrame,
-                        trainUpper256: Int, valUpper256: Int,
-                        packBudget: Int, packShards: Int): DataFrame = {
-    val withSplit = Sampling.split(withToks, col("doc_id"), trainUpper256, valUpper256, seed)
+  private def packStage(spark: SparkSession, withToks: DataFrame): DataFrame = {
+    val withSplit = Sampling.split(withToks, col("doc_id"), TrainUpper256, ValUpper256, Seed)
     stage(spark, "c6_packed",
-      Packing.pack(withSplit, col("doc_id"), col("toks"), packBudget, packShards,
-                   seed, groupCols = Seq(col("split")))
+      Packing.pack(withSplit, col("doc_id"), col("toks"), PackBudget, PackShards,
+                   Seed, groupCols = Seq(col("split")))
         .select(col("doc_id"), col("lang"), col("source"), col("split"),
                 col("toks"), col("shard"), col("pos"), col("pack_id")),
       partitionBy = Seq("split"))
@@ -109,7 +107,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * CC from `c3_minhash_sigs`. */
   private def nearDupKeep(spark: SparkSession, s2: DataFrame, sigs: DataFrame): DataFrame =
     stage(spark, "c3_neardup_collapse",
-      Dedup.clustersFor(s2, Dedup.minhashPairsGuardedFromSigs(sigs),
+      Dedup.clustersFor(s2, Dedup.candidatePairs(sigs),
           (df, name) => stage(spark, s"c3_$name", df))
         .filter(col("keep") === 1).select(col("doc_id")))
 
@@ -117,18 +115,11 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * (read back from the sink), one row per surviving document with its
     * split and pack assignment. */
   def run(spark: SparkSession, docs: DataFrame,
-          langs: Seq[String] = Seq("en", "de", "es", "fr", "zh"),
-          minQualityPpm: Long = 400000L, minAlphaPpm: Long = 500000L,
-          minTokens: Long = 5L,
-          evalDocs: Option[DataFrame] = None, decontamMinHits: Long = 1L,
-          trainUpper256: Int = 236, valUpper256: Int = 246,
-          packBudget: Int = 1024, packShards: Int = 32,
-          stripSpanTokens: Int = 0, stripSpanStride: Int = 0): DataFrame = {
+          evalDocs: Option[DataFrame] = None,
+          stripSpanTokens: Int = 0): DataFrame = {
     // Folded into every lineage row: resume refuses (loudly) to reuse a
-    // checkpoint computed under different thresholds/langs/budgets.
-    stageParams = paramsHash(langs.mkString(","), minQualityPpm, minAlphaPpm,
-      minTokens, evalDocs.isDefined, decontamMinHits, trainUpper256,
-      valUpper256, packBudget, packShards, seed, stripSpanTokens, stripSpanStride)
+    // checkpoint computed under different options.
+    stageParams = paramsHash(evalDocs.isDefined, stripSpanTokens)
 
     // Write amplification is the 100 TB design constraint here: the corpus
     // TEXT is checkpointed exactly TWICE (c0 ingest-normalized, c5 redacted
@@ -142,8 +133,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     val s0 = stage(spark, "c0_ingest", ingest(docs))
 
     // c1: quality decision (carries the sha later stages key on — never text)
-    val s1 = stage(spark, "c1_quality",
-      qualityKeep(s0, langs, minQualityPpm, minAlphaPpm, minTokens))
+    val s1 = stage(spark, "c1_quality", qualityKeep(s0))
 
     // c2: exact dedup
     val s2 = stage(spark, "c2_exact_dedup", exactDedupKeep(s1))
@@ -159,11 +149,10 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     val spanStrips: Option[DataFrame] =
       if (stripSpanTokens <= 0) None
       else {
-        val stride = if (stripSpanStride > 0) stripSpanStride else stripSpanTokens
         val hashes = stage(spark, "c2s_span_hashes",
           Dedup.spanHashes(
             s0.select(col("doc_id"), col("text")).join(s2, Seq("doc_id"), "left_semi"),
-            stripSpanTokens, stride))
+            stripSpanTokens, stripSpanTokens))
         Some(stage(spark, "c2s_span_strips",
           Dedup.spanDecisionsFromHashes(hashes, stripSpanTokens)
             .filter(col("keep") === 0)
@@ -183,7 +172,8 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     // guarded band pairing → connected components → keep only each
     // cluster's representative (pairwise dropping cannot dedup an N-way
     // duplicate group).
-    val sigs = stage(spark, "c3_minhash_sigs", Dedup.bandSignaturesFor(surviving(s2)))
+    val sigs = stage(spark, "c3_minhash_sigs",
+      Dedup.bandSignatures(Dedup.shinglesFor(surviving(s2))))
     val s3 = nearDupKeep(spark, s2, sigs)
 
     // c4: benchmark decontamination (skipped when no eval set is supplied);
@@ -193,7 +183,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
       case Some(ev) =>
         val hits = stage(spark, "c4_hits", contaminationHits(surviving(s3), ev))
         stage(spark, "c4_decontaminated",
-          s3.join(hits.filter(col("n_hits") >= decontamMinHits).select(col("doc_id")),
+          s3.join(hits.filter(col("n_hits") >= DecontamMinHits).select(col("doc_id")),
                   Seq("doc_id"), "left_anti"))
       case None => s3
     }
@@ -206,8 +196,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     val s5 = stage(spark, "c5_redacted", redactRows(s5input))
 
     // c6: split + pack over compact rows (toks from the product text)
-    packStage(spark, s5.select(col("doc_id"), col("lang"), col("source"), toksOf.as("toks")),
-              trainUpper256, valUpper256, packBudget, packShards)
+    packStage(spark, s5.select(col("doc_id"), col("lang"), col("source"), toksOf.as("toks")))
   }
 
   /** Incremental (delta) run against a previous run's checkpoints (`prevIo`):
@@ -232,24 +221,11 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * sandbox scale, like the KG delta); on Iceberg those composed commits
     * are metadata-only and only churn-sized data moves. */
   def runDelta(spark: SparkSession, cur: DataFrame, prevIo: TableIO,
-               langs: Seq[String] = Seq("en", "de", "es", "fr", "zh"),
-               minQualityPpm: Long = 400000L, minAlphaPpm: Long = 500000L,
-               minTokens: Long = 5L,
-               evalDocs: Option[DataFrame] = None, decontamMinHits: Long = 1L,
-               trainUpper256: Int = 236, valUpper256: Int = 246,
-               packBudget: Int = 1024, packShards: Int = 32,
-               stripSpanTokens: Int = 0, stripSpanStride: Int = 0,
+               evalDocs: Option[DataFrame] = None,
+               stripSpanTokens: Int = 0,
                churnKeys: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    stageParams = paramsHash(langs.mkString(","), minQualityPpm, minAlphaPpm,
-      minTokens, evalDocs.isDefined, decontamMinHits, trainUpper256,
-      valUpper256, packBudget, packShards, seed, stripSpanTokens,
-      stripSpanStride, "delta")
-    (io, prevIo) match {
-      case (a: ParquetTableIO, b: ParquetTableIO) =>
-        require(a.root != b.root,
-          s"delta run must write to a different checkpoint dir than prevIo (${a.root})")
-      case _ => require(io ne prevIo, "delta run must not write into prevIo")
-    }
+    stageParams = paramsHash(evalDocs.isDefined, stripSpanTokens, "delta")
+    requireDistinctBase(prevIo)
     require(prevIo.exists(spark, "c3_minhash_sigs"),
       "delta needs the previous run's c3_minhash_sigs table (every run and delta run writes it)")
 
@@ -296,9 +272,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     // for unchanged docs (stale removes deleted + modified-old rows)
     val s1 = stage(spark, "c1_quality",
       prevIo.read(spark, "c1_quality").join(staleKeys, Seq("doc_id"), "left_anti")
-        .unionByName(qualityKeep(
-          s0.join(changedKeys, Seq("doc_id"), "left_semi"),
-          langs, minQualityPpm, minAlphaPpm, minTokens)))
+        .unionByName(qualityKeep(s0.join(changedKeys, Seq("doc_id"), "left_semi"))))
 
     // c2: global over compact (doc_id, sha) rows — a deleted representative
     // promotes its smallest surviving duplicate automatically
@@ -323,7 +297,6 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     val (spanStrips, stripAffected): (Option[DataFrame], DataFrame) =
       if (stripSpanTokens <= 0) (None, changedKeys.limit(0))
       else {
-        val stride = if (stripSpanStride > 0) stripSpanStride else stripSpanTokens
         require(prevIo.exists(spark, "c2s_span_hashes"),
           "delta with stripSpanTokens needs the previous run's c2s_span_hashes " +
           "(base run must use the same stripSpanTokens)")
@@ -332,7 +305,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
             missing => Dedup.spanHashes(
               s0.select(col("doc_id"), col("text"))
                 .join(missing, Seq("doc_id"), "left_semi"),
-              stripSpanTokens, stride)))
+              stripSpanTokens, stripSpanTokens)))
         val strips = stage(spark, "c2s_span_strips",
           Dedup.spanDecisionsFromHashes(hashes, stripSpanTokens)
             .filter(col("keep") === 0)
@@ -359,7 +332,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     // handful of tiny texts, harmless.)
     val sigs = stage(spark, "c3_minhash_sigs",
       composePerDoc(prevIo.read(spark, "c3_minhash_sigs"), invalid, s2,
-        missing => Dedup.bandSignaturesFor(textOf(missing))))
+        missing => Dedup.bandSignatures(Dedup.shinglesFor(textOf(missing)))))
     val s3 = nearDupKeep(spark, s2, sigs)
 
     // c4 composed: contamination is per-doc vs the (assumed-unchanged) eval
@@ -372,7 +345,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
           composePerDoc(prevIo.read(spark, "c4_hits"), invalid, s3,
             missing => contaminationHits(textOf(missing), ev)))
         stage(spark, "c4_decontaminated",
-          s3.join(hits.filter(col("n_hits") >= decontamMinHits).select(col("doc_id")),
+          s3.join(hits.filter(col("n_hits") >= DecontamMinHits).select(col("doc_id")),
                   Seq("doc_id"), "left_anti"))
       case None => s3
     }
@@ -394,8 +367,7 @@ final class CurationPipeline(val io: TableIO, val runId: String,
       missing => s5.join(missing, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), toksOf.as("toks")))
     packStage(spark,
-      s5.select(col("doc_id"), col("lang"), col("source")).join(toks, Seq("doc_id")),
-      trainUpper256, valUpper256, packBudget, packShards)
+      s5.select(col("doc_id"), col("lang"), col("source")).join(toks, Seq("doc_id")))
   }
 
   /** Delta run over a corpus that LIVES in a [[graft.io.SnapshotTable]]
@@ -413,21 +385,14 @@ final class CurationPipeline(val io: TableIO, val runId: String,
     * CurationDeltaSpec. */
   def runDeltaFromSnapshots(spark: SparkSession, corpus: graft.io.SnapshotTable,
                             fromSeq: Long, prevIo: TableIO,
-                            langs: Seq[String] = Seq("en", "de", "es", "fr", "zh"),
-                            minQualityPpm: Long = 400000L, minAlphaPpm: Long = 500000L,
-                            minTokens: Long = 5L,
-                            evalDocs: Option[DataFrame] = None, decontamMinHits: Long = 1L,
-                            trainUpper256: Int = 236, valUpper256: Int = 246,
-                            packBudget: Int = 1024, packShards: Int = 32,
-                            stripSpanTokens: Int = 0, stripSpanStride: Int = 0): DataFrame = {
+                            evalDocs: Option[DataFrame] = None,
+                            stripSpanTokens: Int = 0): DataFrame = {
     val head = corpus.currentSnapshot(spark).getOrElse(
       throw new IllegalStateException(s"no committed snapshot in ${corpus.location}"))
     require(head > fromSeq, s"nothing newer than snapshot $fromSeq in ${corpus.location}")
     val appended = corpus.readAppendsBetween(spark, fromSeq, head).select(col("doc_id"))
     val deleted = corpus.deletedKeysBetween(spark, fromSeq, head, Seq("doc_id"))
-    runDelta(spark, corpus.read(spark), prevIo, langs, minQualityPpm, minAlphaPpm,
-      minTokens, evalDocs, decontamMinHits, trainUpper256, valUpper256,
-      packBudget, packShards, stripSpanTokens, stripSpanStride,
+    runDelta(spark, corpus.read(spark), prevIo, evalDocs, stripSpanTokens,
       churnKeys = Some((appended, deleted)))
   }
 }
@@ -437,6 +402,19 @@ final class CurationPipeline(val io: TableIO, val runId: String,
   * — runs the full (or incremental) curation funnel over the `documents`
   * table, printing the per-stage funnel from the lineage table. */
 object CurationPipeline {
+  // Funnel constants: c1 quality gate, c4 contamination threshold, c6 split
+  // bounds (of 256 hash buckets) and pack shape, and the split/pack seed.
+  private val Langs = Seq("en", "de", "es", "fr", "zh")
+  private val MinQualityPpm = 400000L
+  private val MinAlphaPpm = 500000L
+  private val MinTokens = 5L
+  private val DecontamMinHits = 1L
+  private val TrainUpper256 = 236
+  private val ValUpper256 = 246
+  private val PackBudget = 1024
+  private val PackShards = 32
+  private val Seed = "cp"
+
   def main(args: Array[String]): Unit = {
     val valueFlags = Set("--delta")
     val pos = args.indices

@@ -30,31 +30,31 @@ object Dedup {
   def shingles(spark: SparkSession, dir: String): DataFrame =
     shinglesFor(Tables.documents(spark, dir))
 
-  /** Shingles over any (doc_id, text) frame (unit-test seam). */
-  def shinglesFor(docs: DataFrame): DataFrame = {
-    val ws = filter(split(col("text"), " "), w => length(w) > 0)
+  /** Shingles over any (doc_id, text) frame (unit-test seam). The word
+    * array is projected once, so [[shingleArr]]'s four references to it are
+    * attribute reads rather than four re-splits of the text. */
+  def shinglesFor(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), ws.as("ws"))
-      .select(col("doc_id"),
-        explode(transform(
-          // windows of 3 consecutive non-empty words; element_at is 1-based
-          slice(col("ws"), lit(1), greatest(size(col("ws")) - 2, lit(0))),
-          (w, i) => concat_ws(" ", w, element_at(col("ws"), i + 2),
-                              element_at(col("ws"), i + 3)))).as("shingle"))
-  }
+      .select(col("doc_id"), words(col("text")).as("ws"))
+      .select(col("doc_id"), explode(shingleArr(col("ws"))).as("shingle"))
+
+  /** The one word grammar of every text operator here: the non-empty tokens
+    * of a split on single spaces (runs of spaces yield no empty words). */
+  private def words(text: Column): Column =
+    filter(split(text, " "), w => length(w) > 0)
+
+  /** The per-doc shingle ARRAY (what [[shinglesFor]] explodes), in-row, over
+    * an already-projected [[words]] column: windows of 3 consecutive words. */
+  private[ops] def shingleArr(ws: Column): Column =
+    // element_at is 1-based
+    transform(slice(ws, lit(1), greatest(size(ws) - 2, lit(0))),
+      (w, i) => concat_ws(" ", w, element_at(ws, i + 2), element_at(ws, i + 3)))
 
   /** Exact dedup: content-hash groups with a deterministic representative. */
   def exact(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("rep_doc"), count(lit(1)).as("cnt"))
-
-  /** The per-doc shingle ARRAY (what [[shinglesFor]] explodes), in-row. */
-  private[ops] def shingleArr(text: Column): Column = {
-    val ws = filter(split(text, " "), w => length(w) > 0)
-    transform(slice(ws, lit(1), greatest(size(ws) - 2, lit(0))),
-      (w, i) => concat_ws(" ", w, element_at(ws, i + 2), element_at(ws, i + 3)))
-  }
 
   /** The 8 per-seed minhash minima computed IN-ROW as one expression:
     * element s is min over the doc's shingles of md5(shingle#s) — the SAME
@@ -83,52 +83,27 @@ object Dedup {
     * rows/doc before the exchange (see [[seedMinArr]] for why the in-row
     * expression form is streaming-only). */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFor(Tables.documents(spark, dir))
-
-  def minhashSignaturesFor(docs: DataFrame): DataFrame =
-    minhashSignaturesFromShingles(shinglesFor(docs))
+    minhashes(shinglesFor(Tables.documents(spark, dir)))
 
   /** Signatures from any (doc_id, shingle) stream. MinHash minima are
     * duplicate-invariant (the min over a multiset equals the min over its
     * distinct set), so a caller that already holds a materialized distinct
     * shingle table ([[ngramJaccardFor]]) derives signatures from it instead
     * of re-scanning and re-shingling the corpus a second time. */
-  private[graft] def minhashSignaturesFromShingles(sh: DataFrame): DataFrame =
-    sh
+  def minhashes(shingles: DataFrame): DataFrame =
+    shingles
       .withColumn("seed", explode(sequence(lit(0), lit(7))))
       .groupBy(col("doc_id"), col("seed"))
       .agg(min(md5(concat(col("shingle"), lit("#"), col("seed").cast("string")))).as("minhash"))
 
-  /** LSH banding: 4 bands × 2 rows; near-dup candidate pairs share a band
-    * signature. The pair join is on (band, signature) — high-cardinality keys,
-    * so the self-join cannot hot-spot. The operator entry applies the
-    * [[DefaultMaxBucket]] hot-bucket cap (same row semantics as the guarded
-    * pipeline path — no bucket in the test corpora exceeds it) but stays a
-    * LAZY plan: constructing this DataFrame runs no jobs, so plan-only uses
-    * (explain, plan lint) are free. Pipelines use [[minhashPairsGuarded]],
-    * which additionally materializes the shared signature table and MEASURES
-    * what the cap excluded — at the documented cost of eager jobs. */
-  def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsFor(Tables.documents(spark, dir), DefaultMaxBucket)
-
-  /** Production default for the hot-bucket cap: a 1000-doc bucket still emits
-    * ~5·10^5 pairs — tolerable once; anything larger is an exact-duplicate
-    * cluster that belongs to [[exact]] (the pipeline order is exact-dedup →
-    * near-dedup), not to quadratic band pairing. */
-  val DefaultMaxBucket = 1000
-
-  /** Per-doc LSH band signatures (4 bands × 2 minhash rows) — the per-byte
-    * half of near-dup discovery (everything downstream is compact): public
-    * so pipelines can checkpoint/compose the signature table (delta mode
-    * recomputes signatures for CHANGED docs only and composes the rest). */
-  def bandSignaturesFor(docs: DataFrame): DataFrame =
-    bandSignaturesFromShingles(shinglesFor(docs))
-
-  /** Band signatures from a (doc_id, shingle) stream — see
-    * [[minhashSignaturesFromShingles]] for the duplicate-invariance that
-    * makes a distinct shingle table an equivalent input. */
-  private[graft] def bandSignaturesFromShingles(sh: DataFrame): DataFrame =
-    minhashSignaturesFromShingles(sh)
+  /** Per-doc LSH band signatures (4 bands × 2 minhash rows) from a
+    * (doc_id, shingle) stream — the per-byte half of near-dup discovery
+    * (everything downstream is compact): pipelines stage/compose this table
+    * (delta mode recomputes signatures for CHANGED docs only and composes
+    * the rest). A distinct shingle table is an equivalent input (see
+    * [[minhashes]]). */
+  def bandSignatures(shingles: DataFrame): DataFrame =
+    minhashes(shingles)
       .withColumn("band", shiftright(col("seed"), 1))
       .groupBy(col("doc_id"), col("band"))
       .agg(concat_ws("|",
@@ -141,70 +116,30 @@ object Dedup {
     * common-subexpression elimination — so inlining `m` into each
     * element_at would recompute all 8 minima per reference; CollapseProject
     * keeps the projection split because the alias is non-cheap and
-    * multiply-referenced.) Streaming-only — see [[seedMinArr]]. */
+    * multiply-referenced.) The word array `ws` is a real column for the
+    * same reason, as in [[shinglesFor]]. Streaming-only — see
+    * [[seedMinArr]]. */
   private[graft] def withSeedMins(docs: DataFrame): DataFrame =
-    docs.withColumn("sh", shingleArr(col("text")))
+    docs.withColumn("ws", words(col("text")))
+      .withColumn("sh", shingleArr(col("ws")))
       .withColumn("ne", size(col("sh")) > 0)
       .withColumn("m", seedMinArr(col("sh")))
-      .drop("sh")
+      .drop("ws", "sh")
 
-  /** `maxBucket` is the hot-bucket guard for the band self-join: a (band,
-    * sig) bucket of m docs emits m(m-1)/2 pairs, so one mega-bucket (usually
-    * an exact-duplicate cluster that should have been collapsed by [[exact]]
-    * FIRST) can dominate a whole run quadratically. Buckets above the cap are
-    * excluded from pairing; this raw form keeps the oracled semantics exact
-    * at any scale — the production entry point is [[minhashPairsGuarded]],
-    * which measures and LOGS what the cap excluded (a silent cap would
-    * misread as full coverage). */
-  def minhashPairsFor(docs: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame =
-    pairsFromSigs(bandSignaturesFor(docs), maxBucket)
-
-  private def pairsFromSigs(sigs0: DataFrame, maxBucket: Int,
-      bucketCounts: Option[DataFrame] = None): DataFrame = {
-    val sigs =
-      if (maxBucket == Int.MaxValue) sigs0
-      else {
-        val small = bucketCounts.getOrElse(
-            sigs0.groupBy(col("band"), col("sig")).agg(count(lit(1)).as("bucket_n")))
-          .filter(col("bucket_n") <= maxBucket)
-          .select(col("band"), col("sig"))
-        sigs0.join(small, Seq("band", "sig"), "left_semi")
-      }
-    sigs.as("a").join(sigs.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-  }
-
-  /** The production near-dup candidate path: band pairing with the hot-bucket
-    * cap ON by default, and the exclusions MEASURED per run (mirroring
-    * kg.Candidates' hot-key measurement) — the count and worst sizes of
-    * excluded buckets are printed so a capped run can never silently read as
-    * full coverage. The signature table is materialized once (executor-local,
-    * `localCheckpoint` — it visibly spilled at 8M docs on an 8g heap) and
-    * shared by the guard measurement and the pair join, instead of
-    * recomputing minhashes twice. A checkpointed pipeline stages its own
-    * signature table and calls [[minhashPairsGuardedFromSigs]] instead
-    * (CurationPipeline's `c3_minhash_sigs`, which resumes and is the delta
-    * composition base).
+  /** Near-dup candidate pairs (d1 < d2) from a band signature table: docs
+    * that share a (band, sig) bucket. The pair join is on high-cardinality
+    * keys, so the self-join cannot hot-spot — except for one mega-bucket (an
+    * exact-duplicate cluster [[exact]] should have collapsed FIRST), which
+    * emits m(m-1)/2 pairs. `maxBucket` is that hot-bucket guard: buckets above
+    * it are excluded from pairing, and the exclusions are MEASURED and logged
+    * per run (mirroring kg.Candidates' hot-key measurement), so a capped run
+    * never silently reads as full coverage.
     *
-    * NOTE: CONSTRUCTING this DataFrame runs real Spark jobs (the signature
-    * materialization and the guard measurement are driver actions) — that is
-    * the point of the guarded path. Plan-only consumers should use
-    * [[minhashPairsFor]] with the same cap, which is semantically identical
-    * and fully lazy. */
-  def minhashPairsGuarded(docs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashPairsGuardedFromSigs(bandSignaturesFor(docs).localCheckpoint(), maxBucket)
-
-  /** The guarded pair join over an already-materialized (or composed —
-    * delta mode) signature table: measures + logs what the cap excluded,
-    * then pairs. Same eager-measurement caveat as [[minhashPairsGuarded]]. */
-  def minhashPairsGuardedFromSigs(sigs: DataFrame,
-                                  maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // ONE bucket-count aggregation serves both the guard measurement and the
-    // cap filter (it previously ran twice over the signature table); the
-    // counts table is (band, sig)-cardinality-sized and materialized.
+    * `sigs` must be materialized (a staged table or a `localCheckpoint`): it
+    * is read by the bucket count and by both sides of the self-join.
+    * Constructing this DataFrame runs Spark jobs — the bucket count is
+    * materialized once and serves both the measurement and the cap filter. */
+  def candidatePairs(sigs: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val bucketCounts = sigs.groupBy(col("band"), col("sig"))
       .agg(count(lit(1)).as("bucket_n")).localCheckpoint()
     val hot = bucketCounts
@@ -216,8 +151,26 @@ object Dedup {
       println(s"[dedup] hot-bucket guard: EXCLUDED $nExcluded (band,sig) buckets " +
         s"larger than $maxBucket docs (largest=${hot.get(1)}) from near-dup pairing — " +
         "run exact dedup first, or raise maxBucket to include them")
-    pairsFromSigs(sigs, maxBucket, Some(bucketCounts))
+    val small = bucketCounts.filter(col("bucket_n") <= maxBucket).select(col("band"), col("sig"))
+    val capped = sigs.join(small, Seq("band", "sig"), "left_semi")
+    capped.as("a").join(capped.as("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
+      .distinct()
   }
+
+  /** LSH banding: 4 bands × 2 rows; near-dup candidate pairs share a band
+    * signature ([[candidatePairs]] with the [[DefaultMaxBucket]] cap over
+    * the executor-local signature table). */
+  def minhashPairs(spark: SparkSession, dir: String): DataFrame =
+    candidatePairs(bandSignatures(shinglesFor(Tables.documents(spark, dir))).localCheckpoint())
+
+  /** Production default for the hot-bucket cap: a 1000-doc bucket still emits
+    * ~5·10^5 pairs — tolerable once; anything larger is an exact-duplicate
+    * cluster that belongs to [[exact]] (the pipeline order is exact-dedup →
+    * near-dedup), not to quadratic band pairing. */
+  val DefaultMaxBucket = 1000
 
   // --- Substring/passage-level dedup -----------------------------------
   //
@@ -238,8 +191,7 @@ object Dedup {
     * array never leaves its row); only full n-token windows are emitted. */
   def spanHashes(docs: DataFrame, n: Int, stride: Int): DataFrame = {
     require(n > 0 && stride > 0, "span length and stride must be positive")
-    val ws = filter(split(col("text"), " "), w => length(w) > 0)
-    docs.select(col("doc_id"), ws.as("ws"))
+    docs.select(col("doc_id"), words(col("text")).as("ws"))
       // sequence(a, b) steps DOWNWARD when b < a, so the short-doc case must
       // be guarded to an empty start list, not sequence(0, negative)
       .select(col("doc_id"), col("ws"),
@@ -284,8 +236,7 @@ object Dedup {
                     decisions.filter(col("keep") === 0) else decisions)
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_len"))).as("strips"))
-    val ws = filter(split(col("text"), " "), w => length(w) > 0)
-    val kept = filter(ws, (w, i) =>
+    val kept = filter(words(col("text")), (w, i) =>
       !exists(col("strips"), s =>
         i >= s.getField("span_start") &&
         i < s.getField("span_start") + s.getField("span_len")))
@@ -329,8 +280,8 @@ object Dedup {
   def ngramJaccardFor(docs: DataFrame): DataFrame = {
     // the distinct shingle-set table is read four times (per-doc counts,
     // both intersection sides and the signature derivation), the signature
-    // table twice (both sides of the self-join in pairsFromSigs) and the
-    // candidate pairs twice — materialize each so the shingle and
+    // table three times (the bucket count and both sides of the self-join in
+    // candidatePairs) and the candidate pairs twice — materialize each so the shingle and
     // minhash/band towers compute once per run, not per reference (the pair
     // set is the tiny post-LSH survivor table).
     val sets = shinglesFor(docs).select(col("doc_id"), col("shingle")).distinct()
@@ -338,11 +289,11 @@ object Dedup {
     val counts = sets.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // LSH candidates from the SAME materialized shingle table: minhash
     // minima are duplicate-invariant, so signatures over the distinct sets
-    // are identical to minhashPairsFor(docs) — without scanning and
-    // shingling the corpus a second time (equivalence property-tested in
+    // are identical to bandSignatures(shinglesFor(docs)) — without scanning
+    // and shingling the corpus a second time (equivalence property-tested in
     // DedupSimilaritySpec; at 100 TB this halves the stage's corpus passes).
-    val pairs = pairsFromSigs(bandSignaturesFromShingles(sets).localCheckpoint(), Int.MaxValue)
-      .localCheckpoint()
+    // The pairs are exactly the capped set minhashPairs returns.
+    val pairs = candidatePairs(bandSignatures(sets).localCheckpoint()).localCheckpoint()
     val inter = pairs
       .join(sets.as("x"), col("d1") === col("x.doc_id"))
       .join(sets.as("y"), col("d2") === col("y.doc_id") && col("x.shingle") === col("y.shingle"))
@@ -524,6 +475,6 @@ object Dedup {
     * `documents` table into clusters + keep/drop. */
   def clusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    clustersFor(docs, minhashPairsGuarded(docs))
+    clustersFor(docs, candidatePairs(bandSignatures(shinglesFor(docs)).localCheckpoint()))
   }
 }

@@ -7,7 +7,7 @@ import graft.ops.Dedup
 /** Streaming NEAR-dup filtering against a static signature index — the
   * production split of near-dedup across batch and stream: the nightly batch
   * funnel consolidates the corpus and publishes its MinHash-LSH band
-  * signature table (`Dedup.bandSignaturesFor`, the curation pipeline's
+  * signature table (`Dedup.bandSignatures`, the curation pipeline's
   * checkpointed `c3_minhash_sigs` stage); the intra-day ingest stream then
   * drops any arriving document that LSH-collides with the existing corpus
   * before it is stored or processed further.
@@ -16,9 +16,10 @@ import graft.ops.Dedup
   * stateful any-of-k-bands match — per-band dedup state PLUS a per-doc vote,
   * i.e. chained stateful operators over an unbounded keyspace. The
   * stream-vs-index form needs NO state at all: band signatures are computed
-  * IN-ROW (`Dedup.withSeedMins` — the same exchange-free expression the
-  * batch path uses, so stream and batch signatures are identical by
-  * construction), and each band becomes one stream-static LEFT ANTI join
+  * IN-ROW (`Dedup.withSeedMins`: the batch path's word grammar and shingle
+  * array, projected once per document, with the per-seed minima as one
+  * stateless expression; equal to the batch signatures, property-tested),
+  * and each band becomes one stream-static LEFT ANTI join
   * against the index — stateless, supported in append mode, and exactly the
   * semantics "new vs existing corpus" that a daily-crawl pipeline wants.
   * Stream-vs-stream bursts of IDENTICAL content are already handled by
@@ -34,7 +35,7 @@ object StreamingNearDedup {
 
   /** Adds `sig_0..sig_3` band-signature columns to a (doc_id, text, ...)
     * frame, in-row (works on streaming AND batch frames — equivalence with
-    * `Dedup.bandSignaturesFor` is property-tested). */
+    * `Dedup.bandSignatures` is property-tested). */
   def withBandSigCols(docs: DataFrame): DataFrame = {
     val withM = Dedup.withSeedMins(docs)
     (0 until 4).foldLeft(withM) { (df, b) =>
@@ -46,7 +47,7 @@ object StreamingNearDedup {
 
   /** Drop stream documents whose content LSH-collides (any of the 4 band
     * signatures) with `index` — a static `(band, sig)` table as published
-    * by `Dedup.bandSignaturesFor` (extra columns like doc_id are ignored).
+    * by `Dedup.bandSignatures` (extra columns like doc_id are ignored).
     * Emits the input columns plus the four `sig_b` columns (kept so the
     * survivors' signatures can be appended to tomorrow's index without
     * recomputation). */

@@ -36,10 +36,21 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (base ++ dups).toDF("doc_id", "text")
   }
 
+  /** The materialized band signature table `candidatePairs` requires. */
+  private def sigsOf(d: org.apache.spark.sql.DataFrame) =
+    Dedup.bandSignatures(Dedup.shinglesFor(d)).localCheckpoint()
+
   test("shingles: in-row computation matches the sliding-window definition") {
     val d = Seq((1L, "a  bb ccc dddd e")).toDF("doc_id", "text") // double space
     val sh = Dedup.shinglesFor(d).as[(Long, String)].collect().map(_._2).toSeq
     assert(sh == Seq("a bb ccc", "bb ccc dddd", "ccc dddd e"))
+    // the streaming path's in-row shingle array (withSeedMins: words →
+    // shingleArr → per-seed minima) sees exactly the exploded stream
+    val stream = Dedup.minhashes(Dedup.shinglesFor(d))
+      .as[(Long, Int, String)].collect().map(r => r._2 -> r._3).toMap
+    val inRow = Dedup.withSeedMins(d).select(col("ne"), col("m"))
+      .as[(Boolean, Seq[String])].head()
+    assert(inRow == ((true, (0 until 8).map(stream))))
     // short docs produce no shingles, not a crash
     assert(Dedup.shinglesFor(Seq((2L, "one two")).toDF("doc_id", "text")).count() == 0)
   }
@@ -47,13 +58,13 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("band signatures from distinct shingles equal the from-docs form") {
     // the `docs` corpus repeats words inside each sentence, so its shingle
     // multiset has real duplicates — min-over-distinct must still match
-    val fromDocs = Dedup.bandSignaturesFor(docs)
+    val fromDocs = Dedup.bandSignatures(Dedup.shinglesFor(docs))
       .as[(Long, Int, String)].collect().toSet
     val distinctSets = Dedup.shinglesFor(docs)
       .select(col("doc_id"), col("shingle")).distinct()
     assert(Dedup.shinglesFor(docs).count() > distinctSets.count(),
       "corpus has no duplicate shingles: the invariance check would be vacuous")
-    val fromSets = Dedup.bandSignaturesFromShingles(distinctSets)
+    val fromSets = Dedup.bandSignatures(distinctSets)
       .as[(Long, Int, String)].collect().toSet
     assert(fromDocs == fromSets)
     assert(fromDocs.nonEmpty)
@@ -61,7 +72,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("LSH→Jaccard funnel: every planted near-dup pair survives") {
     val expected = Set((0L, 100L), (1L, 101L), (2L, 102L))
-    val pairs = Dedup.minhashPairsFor(docs)
+    val pairs = Dedup.candidatePairs(sigsOf(docs))
       .as[(Long, Long)].collect().toSet
     assert(expected.subsetOf(pairs), s"LSH candidates missed near-dups: $pairs")
     val jac = Dedup.ngramJaccardFor(docs)
@@ -98,18 +109,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val mega = (0 until 30).map(i => (i.toLong, sentence(7, 40))) ++
                Seq((500L, sentence(8, 40)), (501L, sentence(9, 40)))
     val df = mega.toDF("doc_id", "text")
-    val unguarded = Dedup.minhashPairsFor(df).count()
+    def pairSet(d: org.apache.spark.sql.DataFrame, maxBucket: Int) =
+      Dedup.candidatePairs(sigsOf(d), maxBucket).as[(Long, Long)].collect().toSet
+    val unguarded = pairSet(df, Int.MaxValue).size
     assert(unguarded >= 435, s"mega-cluster should pair quadratically unguarded: $unguarded")
-    val guarded = Dedup.minhashPairsFor(df, maxBucket = 10).count()
+    val guarded = pairSet(df, 10).size
     assert(guarded == 0, s"capped buckets must not pair: $guarded")
-    // the PRODUCTION path (measured + logged guard) applies the same cap…
-    assert(Dedup.minhashPairsGuarded(df, maxBucket = 10).count() == 0)
-    // …and its default cap leaves normal corpora untouched
-    assert(Dedup.minhashPairsGuarded(docs).as[(Long, Long)].collect().toSet ==
-           Dedup.minhashPairsFor(docs).as[(Long, Long)].collect().toSet)
-    // the cap does not disturb normal near-dup discovery
-    assert(Dedup.minhashPairsFor(docs, maxBucket = 10).as[(Long, Long)].collect().toSet ==
-           Dedup.minhashPairsFor(docs).as[(Long, Long)].collect().toSet)
+    // the default cap leaves normal corpora untouched…
+    val uncapped = pairSet(docs, Int.MaxValue)
+    assert(Dedup.candidatePairs(sigsOf(docs)).as[(Long, Long)].collect().toSet == uncapped)
+    // …and even a tight cap does not disturb normal near-dup discovery
+    assert(pairSet(docs, 10) == uncapped)
   }
 
   test("cluster collapse: a 3-way duplicate chain keeps exactly one representative") {
@@ -209,7 +219,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("cluster collapse end-to-end: planted near-dups drop, all else kept") {
-    val out = Dedup.clustersFor(docs, Dedup.minhashPairsGuarded(docs))
+    val out = Dedup.clustersFor(docs, Dedup.candidatePairs(sigsOf(docs)))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     // docs 100..102 are near-dups of 0..2 → cluster to the base doc, keep=0
     (0 until 3).foreach { i =>

@@ -22,7 +22,8 @@ class StreamingIngestFunnelSpec extends AnyFunSuite {
 
     val indexed = "the quick brown fox jumps over the lazy dog again and again"
     val fresh = "a completely original document with enough plain words to pass the gate"
-    val index = Dedup.bandSignaturesFor(Seq((1L, indexed)).toDF("doc_id", "text"))
+    val index = Dedup.bandSignatures(
+        Dedup.shinglesFor(Seq((1L, indexed)).toDF("doc_id", "text")))
       .select(col("band"), col("sig"))
 
     Seq(

@@ -16,8 +16,8 @@ class StreamingNearDedupSpec extends AnyFunSuite {
     .parquet("/root/testdata/sf0.001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
-  test("in-row band signatures ≡ Dedup.bandSignaturesFor on the testdata corpus") {
-    val batch = Dedup.bandSignaturesFor(corpus)
+  test("in-row band signatures ≡ Dedup.bandSignatures on the testdata corpus") {
+    val batch = Dedup.bandSignatures(Dedup.shinglesFor(corpus))
       .select(col("doc_id"), col("band"), col("sig"))
       .as[(Long, Int, String)].collect().toSet
     val inRow = StreamingNearDedup.withBandSigCols(corpus)
@@ -36,7 +36,8 @@ class StreamingNearDedupSpec extends AnyFunSuite {
 
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     // corpus doc 1 = base; the index is its published band signature table
-    val index = Dedup.bandSignaturesFor(Seq((1L, base)).toDF("doc_id", "text"))
+    val index = Dedup.bandSignatures(
+        Dedup.shinglesFor(Seq((1L, base)).toDF("doc_id", "text")))
       .select(col("band"), col("sig"))
 
     // stream: 10 = exact re-crawl of base, 11 = near-dup (one word changed
