@@ -250,11 +250,12 @@ object SparkEntry {
     // its oracle is the independent single-threaded one in the test suite)
     "kg_pipeline_synthetic" -> ((s: SparkSession, dir: String) => {
       val src = graft.kg.CorpusGen.srcFiles(s, 300).toDF()
-      val mentions = graft.kg.Extract.mentions(src)
+      val perLine = graft.kg.Extract.perLine(src)
+      val mentions = graft.kg.Extract.mentionsFromLines(perLine)
       val dict = graft.kg.Candidates.dictionary(graft.kg.CorpusGen.kbEntries(s).toDF())
       val cands = graft.kg.Candidates.candidates(mentions, dict, broadcastDict = true)
-      val top1 = graft.kg.Scoring.top1(
-        graft.kg.Scoring.score(mentions, cands, graft.kg.CorpusGen.kbContexts(s).toDF()))
+      val top1 = graft.kg.Scoring.top1(graft.kg.Scoring.score(
+        cands, graft.kg.Extract.contexts(perLine), graft.kg.CorpusGen.kbContexts(s).toDF()))
       graft.kg.Canonicalize.triples(graft.kg.Canonicalize.canonicalMentions(mentions, top1))
     }),
     // classic agg baseline

@@ -85,9 +85,6 @@ trait StagedRun {
                 lit("committed").as("status"), lit(wallMs).as("wall_ms"),
                 lit(stageParams).as("params"))
       io.append(lineage, LineageTable)
-      val lineageMs = (System.nanoTime() - t0) / 1000000L - wallMs
-      if (sys.env.contains("SPARK_GRAFT_STAGE_TIMING"))
-        println(s"[stage] $name write=${wallMs}ms lineage=${lineageMs}ms")
       out
     }
   }

@@ -30,22 +30,18 @@ object Candidates {
       .filter(col("cnt") > threshold)
       .select(col("norm").as("hot_norm"))
 
-  /** J1/J2: candidate pairs (mention_id, ctx_id, entity_id, prior).
+  /** J1/J2: candidate pairs (mention_id, ctx_id, entity_id, prior) of the
+    * [[Extract.mentionsFromLines]] rows.
     *
-    * ctx_id rides through the join (when the mention frame carries it) so
-    * the scoring stage can go straight to the context level WITHOUT
-    * re-joining the two largest tables of the pipeline (mentions ⋈
-    * candidates on mention_id was two exchanges + a shuffle join of ~N_mention
-    * rows each — measured the dominant part of stage 3). */
+    * ctx_id rides through the join so the scoring stage goes straight to the
+    * context level WITHOUT re-joining the two largest tables of the pipeline
+    * (mentions ⋈ candidates on mention_id was two exchanges + a shuffle join
+    * of ~N_mention rows each — measured the dominant part of stage 3). */
   def candidates(mentions: DataFrame, dict: DataFrame,
                  broadcastDict: Boolean, saltR: Int = 8,
                  hotThreshold: Long = 10000L): DataFrame = {
-    val carryCtx = mentions.columns.contains("ctx_id")
-    val mCols = if (carryCtx) Seq(col("mention_id"), col("ctx_id"), col("norm"))
-                else Seq(col("mention_id"), col("norm"))
-    val outCols = if (carryCtx) Seq(col("mention_id"), col("ctx_id"), col("entity_id"), col("prior"))
-                  else Seq(col("mention_id"), col("entity_id"), col("prior"))
-    val m = mentions.select(mCols: _*)
+    val outCols = Seq(col("mention_id"), col("ctx_id"), col("entity_id"), col("prior"))
+    val m = mentions.select(col("mention_id"), col("ctx_id"), col("norm"))
     if (broadcastDict) {
       m.join(broadcast(dict), col("norm") === col("norm_key"), "inner")
         .select(outCols: _*)

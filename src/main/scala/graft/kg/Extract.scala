@@ -3,7 +3,9 @@ package graft.kg
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Mention extraction (SURVEY.md §2.3, E1–E8): src_files → Mention rows.
+/** Mention extraction (SURVEY.md §2.3, E1–E8): src_files → the per-line
+  * table ([[perLine]]), from which the mention rows ([[mentionsFromLines]])
+  * and the context table ([[contexts]]) both derive.
   *
   * Everything is built-in generator/regexp/array expressions — no UDFs, no
   * custom Generator — one WholeStageCodegen span around the whole per-line
@@ -144,20 +146,4 @@ object Extract {
         col("repo"), col("path"), col("commit"), col("ctx_id"),
         col("line_no").as("line"), col("m.kind").as("kind"), col("m.surface").as("surface"),
         normalize(col("m.surface")).as("norm"))
-
-  /** Back-compat single-DataFrame form: mention rows WITH ctx_terms (used by
-    * unit tests and the operator queries; the pipeline keeps the two-table
-    * form to avoid duplicating contexts per mention). */
-  def mentions(src: DataFrame, k: Int = 2): DataFrame = {
-    val pl = perLine(src, k)
-    pl.select(col("repo"), col("path"), col("commit"), col("ctx_id"),
-              col("line_no"), col("ctx_terms"), explode(col("ms")).as("m"))
-      .select(
-        xxhash64(col("repo"), col("path"), col("commit"), col("line_no"),
-                 col("m.kind"), col("m.surface")).as("mention_id"),
-        col("repo"), col("path"), col("commit"), col("ctx_id"),
-        col("line_no").as("line"), col("m.kind").as("kind"), col("m.surface").as("surface"),
-        normalize(col("m.surface")).as("norm"),
-        col("ctx_terms"))
-  }
 }

@@ -45,11 +45,8 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val contexts = Extract.contexts(perLine)
 
     // Stage 2: candidate generation (broadcast-vs-salted decided on measured size)
-    val dict = Candidates.dictionary(kb)
-    val dictRows = dict.count()
     val cands = stage(spark, "stage2_candidates",
-      Candidates.candidates(mentions, dict, broadcastDict = dictRows <= broadcastDictMaxRows,
-                            saltR = SaltR, hotThreshold = hotThreshold))
+      candidates(mentions, kb, hotThreshold, broadcastDictMaxRows))
 
     linkAndMaterialize(spark, mentions, cands, contexts, kbCtx, broadcastKbCtxMaxRows)
   }
@@ -65,6 +62,16 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
         .count()
       require(mismatches == 0, s"sha256 invariant violated$scope: $mismatches rows")
     }
+
+  /** The candidate join of `mentions` against `kb`'s dictionary: broadcast
+    * when the dictionary's measured row count is at most
+    * `broadcastDictMaxRows`, else the hot-key-salted shuffle join. */
+  private def candidates(mentions: DataFrame, kb: DataFrame, hotThreshold: Long,
+                         broadcastDictMaxRows: Long): DataFrame = {
+    val dict = Candidates.dictionary(kb)
+    Candidates.candidates(mentions, dict, broadcastDict = dict.count() <= broadcastDictMaxRows,
+                          hotThreshold = hotThreshold)
+  }
 
   /** Stages 3–4, shared by full and delta runs (these are corpus-GLOBAL —
     * IDF and majority vote see the whole composed corpus, so a delta run's
@@ -87,7 +94,7 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val kbCtxRows = kbMeasure.getLong(0)
     val kbTermRows = kbMeasure.getLong(1)
     val top1 = stage(spark, "stage3_top1",
-      Scoring.top1(Scoring.score(mentions, cands, kbCtx, Some(contexts),
+      Scoring.top1(Scoring.score(cands, contexts, kbCtx,
         broadcastKbCtx = kbCtxRows <= broadcastKbCtxMaxRows,
         broadcastKbTerms = kbTermRows <= BroadcastKbTermsMaxRows)))
 
@@ -124,12 +131,11 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     // reads of it execute.
     requireDistinctBase(prevIo)
     val keyShaCols = (Delta.FileKey :+ "sha256").map(col)
-    // Previous corpus fingerprint: the compact (key, sha) table when the
-    // previous run wrote one (full and delta runs both do), else derived from
-    // its content checkpoint (older layouts).
-    val prevShas = (if (prevIo.exists(spark, "stage0_shas")) prevIo.read(spark, "stage0_shas")
-                    else prevIo.read(spark, "stage0_files"))
-      .select(keyShaCols: _*)
+    // Previous corpus fingerprint: the compact (key, sha) table every full
+    // and delta run writes.
+    require(prevIo.exists(spark, "stage0_shas"),
+      "delta needs the previous run's stage0_shas table (every run and delta run writes it)")
+    val prevShas = prevIo.read(spark, "stage0_shas").select(keyShaCols: _*)
 
     // Stage 0Δ: ONE content-hash pass over the current corpus writes this
     // run's compact (key, sha) table (which also makes THIS run a valid base
@@ -159,12 +165,8 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
     val perLineDelta  = stage(spark, "stage1_lines_delta", Extract.perLine(filesDelta, K))
     val mentionsDelta = stage(spark, "stage1_mentions_delta",
       Extract.mentionsFromLines(perLineDelta))
-    val dict = Candidates.dictionary(kb)
-    val dictRows = dict.count()
     val candsDelta = stage(spark, "stage2_candidates_delta",
-      Candidates.candidates(mentionsDelta, dict,
-        broadcastDict = dictRows <= broadcastDictMaxRows,
-        saltR = SaltR, hotThreshold = hotThreshold))
+      candidates(mentionsDelta, kb, hotThreshold, broadcastDictMaxRows))
 
     // Composition: previous per-file rows minus stale keys, plus the delta —
     // CHECKPOINTED under the canonical stage names, for two reasons that both
@@ -205,8 +207,6 @@ final class Pipeline(val io: TableIO, val runId: String, val resume: Boolean = f
 object Pipeline {
   /** Context window (±lines) of extraction. */
   private val K = 2
-  /** Hot-key salting fan-out of the candidate join. */
-  private val SaltR = 8
   /** Distinct-term count under which stage 3 broadcasts the KB vocabulary. */
   private val BroadcastKbTermsMaxRows = 5000000L
 

@@ -12,17 +12,18 @@ import graft.functions.TermCounter
   *
   * Shuffle budget — designed for 10^12 files, where this stage is the
   * pipeline's largest data volume:
-  *  1. contexts are deduplicated per line (every mention on a line shares the
+  *  1. contexts are stored once per line (every mention on a line shares the
   *     identical ±k context), so all TF work is per distinct context;
   *  2. term frequencies are computed INSIDE the row with array higher-order
   *     functions — the corpus-wide (ctx, term) hash aggregation (the biggest
   *     shuffle in the naive plan) never happens;
   *  3. the IDF aggregation's map-side combine reduces to vocabulary-bounded
   *     rows per partition before its exchange;
-  *  4. `dropDuplicates(ctx_id)` leaves the stream hash-partitioned by
-  *     ctx_id, and the norm aggregation and the scoring join both reuse that
-  *     one exchange (the explicit mention-hash repartitioning the north rule
-  *     mandates — expressed once, reused thrice);
+  *  4. one `repartition(ctx_id)` of the compact context rows leaves the
+  *     stream hash-partitioned by ctx_id, and the norm aggregation and the
+  *     scoring join both reuse that one exchange (the explicit mention-hash
+  *     repartitioning the north rule mandates — expressed once, reused
+  *     thrice);
   *  5. each (context, entity) cosine is computed once and fanned back out to
   *     co-located mentions.
   *
@@ -59,9 +60,11 @@ object Scoring {
       .crossJoin(broadcast(nCtx))
       .select(col("term"), TermCounter.idf(col("n"), col("df")).as("idf"))
 
-  /** `contexts`: the per-line context table (already unique by ctx_id) when
-    * the caller has it checkpointed (the pipeline path — no dedup shuffle);
-    * otherwise derived from the mention rows.
+  /** Scores every candidate pair. `candidates` is [[Candidates.candidates]]
+    * output (mention_id, ctx_id, entity_id, prior); `contexts` is the
+    * (ctx_id, ctx_terms) table of [[Extract.contexts]], one row per ctx_id.
+    * Its `count()` is the IDF numerator's context count, so it should be a
+    * checkpointed table (a parquet-metadata read).
     *
     * `broadcastKbCtx`: the entity context-vector table is broadcast only when
     * the caller measured it small (a DBpedia-scale KB is multi-GB exploded —
@@ -73,18 +76,16 @@ object Scoring {
     * join above it (at DBpedia scale the distinct KB vocabulary alone is
     * 10^6–10^7 strings — a multi-hundred-MB broadcast); when false the prune
     * runs as a shuffled-hash semi-join instead. */
-  def score(mentions: DataFrame, candidates: DataFrame, kbCtx: DataFrame,
-            contexts: Option[DataFrame] = None,
+  def score(candidates: DataFrame, contexts: DataFrame, kbCtx: DataFrame,
             broadcastKbCtx: Boolean = true,
             idfOverride: Option[DataFrame] = None,
             broadcastKbTerms: Boolean = true): DataFrame = {
 
-    // distinct line contexts, hash-partitioned by ctx_id up front — the one
-    // explicit exchange of the COMPACT rows (terms still in arrays); the tf
-    // explode, the norm aggregation and the scoring join's big side all
-    // inherit it, so the exploded term stream is never shuffled at all.
-    val ctxs = contexts.map(_.repartition(col("ctx_id"))).getOrElse(
-      mentions.select(col("ctx_id"), col("ctx_terms")).dropDuplicates("ctx_id"))
+    // line contexts, hash-partitioned by ctx_id up front — the one explicit
+    // exchange of the COMPACT rows (terms still in arrays); the tf explode,
+    // the norm aggregation and the scoring join's big side all inherit it,
+    // so the exploded term stream is never shuffled at all.
+    val ctxs = contexts.repartition(col("ctx_id"))
 
     // The per-(ctx, term) stream feeds three consumers (the IDF aggregation,
     // the pruned dot-product fan-out and the norm aggregation). Measured at
@@ -101,20 +102,10 @@ object Scoring {
     // each partition to vocabulary size before the (cheap) exchange.
     val idf = idfOverride.getOrElse {
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      // context count: when the caller passes a checkpointed contexts table
-      // (the pipeline path) count() is a parquet-metadata read — the (n+1)
-      // numerator becomes a literal, dropping the separate aggregation pass
-      // over the context stream AND its BroadcastNestedLoopJoin wrapper.
-      // Without a contexts frame (operator/test path) keep the lazy agg.
-      contexts match {
-        case Some(c) =>
-          val n = c.count()
-          df.select(col("term"), TermCounter.idf(lit(n), col("df")).as("idf"))
-        case None =>
-          val nCtx = ctxs.agg(count(lit(1)).as("n"))
-          df.crossJoin(broadcast(nCtx))
-            .select(col("term"), TermCounter.idf(col("n"), col("df")).as("idf"))
-      }
+      // context count as a literal: no separate aggregation pass over the
+      // context stream and no BroadcastNestedLoopJoin wrapper in the plan
+      val n = contexts.count()
+      df.select(col("term"), TermCounter.idf(lit(n), col("df")).as("idf"))
     }
 
     // idf is vocabulary-sized → AQE broadcasts it; wM stays partitioned by ctx_id
@@ -135,15 +126,7 @@ object Scoring {
     // kbCtx joins left-outer so ALL context terms flow through one groupBy,
     // which emits the dot product and the context norm together (A3+A4 in a
     // single pass over the big side — no separate norm aggregation).
-    //
-    // pairs: when the candidate table already carries ctx_id (the pipeline
-    // path — Candidates passes it through the dictionary join), the
-    // mentions ⋈ candidates re-join on mention_id is skipped entirely: that
-    // join shuffled the two largest tables of the pipeline.
-    val pairs =
-      if (candidates.columns.contains("ctx_id"))
-        candidates.select(col("mention_id"), col("ctx_id"), col("entity_id"), col("prior"))
-      else candidates.join(mentions.select(col("mention_id"), col("ctx_id")), "mention_id")
+    val pairs = candidates.select(col("mention_id"), col("ctx_id"), col("entity_id"), col("prior"))
     // distinct (ctx, entity) pairs, pre-partitioned by ctx_id alone: the
     // ctx_id hash partitioning satisfies the distinct's clustered
     // distribution (subset of keys) AND the downstream wM join — one

@@ -17,24 +17,6 @@ case class KbEntry(entity_id: Long, label: String, aliases: Array[String], prior
 /** Per-entity context term with pre-normalized weight (S3). */
 case class KbContext(entity_id: Long, term: String, weight: Double)
 
-/** An extracted candidate mention (E1–E8). ctx_id keys into the per-line
-  * context table (contexts are stored once per line, not per mention). */
-case class Mention(
-    mention_id: Long,
-    repo: String, path: String, commit: String, ctx_id: Long,
-    line: Int, kind: String, surface: String, norm: String)
-
-/** Per-line ±k context (E6/W2), shared by all mentions on the line. */
-case class LineContext(ctx_id: Long, ctx_terms: Array[String])
-
 /** Gold annotation row (T2D/Limaye-style fixture, FIXTURES.md A4). */
 case class Gold(repo: String, path: String, commit: String,
                 line: Int, kind: String, surface: String, entity_id: Long)
-
-/** Final output triple (S5). */
-case class Triple(subj: String, pred: String, obj: String, conf: Double,
-                  src_repo: String, src_path: String, src_commit: String)
-
-/** Per-partition lineage/metrics row (S7, BASELINE.json north_rule). */
-case class LineageRow(run_id: String, stage: String, partition_id: Int,
-                      rows_out: Long, status: String, wall_ms: Long)

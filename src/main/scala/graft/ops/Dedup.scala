@@ -225,15 +225,13 @@ object Dedup {
   }
 
   /** Apply strip decisions: rebuild each document's text with the tokens of
-    * every keep=0 span removed (token-level — rebuilt text is the kept
+    * every strip span removed (token-level — rebuilt text is the kept
     * tokens joined by single spaces). All columns pass through, `text`
-    * replaced. The decisions table is compact (only affected docs join);
-    * unaffected documents' text is returned untouched, byte-identical.
-    * `decisions` is [[dupSpans]] output, or a pre-filtered compact
-    * (doc_id, span_start, span_len) strip table (no `keep` column). */
-  def stripSpans(docs: DataFrame, decisions: DataFrame): DataFrame = {
-    val strips = (if (decisions.columns.contains("keep"))
-                    decisions.filter(col("keep") === 0) else decisions)
+    * replaced. `strips` is the compact (doc_id, span_start, span_len) table
+    * of the keep = 0 rows of [[dupSpans]] (only affected docs join);
+    * unaffected documents' text is returned untouched, byte-identical. */
+  def stripSpans(docs: DataFrame, strips: DataFrame): DataFrame = {
+    val perDoc = strips
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(col("span_start"), col("span_len"))).as("strips"))
     val kept = filter(words(col("text")), (w, i) =>
@@ -245,7 +243,7 @@ object Dedup {
                        .otherwise(concat_ws(" ", kept)).as("text")
       case c => col(c)
     }
-    docs.join(strips, Seq("doc_id"), "left_outer").select(outCols.toSeq: _*)
+    docs.join(perDoc, Seq("doc_id"), "left_outer").select(outCols.toSeq: _*)
   }
 
   /** Operator entry: 10-token windows at stride 5 over `documents` (the

@@ -96,7 +96,8 @@ object DocOps {
     * their comment/import lines inside the query. */
   private def fixtureMentions(spark: SparkSession): DataFrame = {
     graft.Fixtures.ensure(spark)
-    graft.kg.Extract.mentions(spark.read.parquet(graft.Fixtures.SrcCorpusParquet))
+    graft.kg.Extract.mentionsFromLines(
+      graft.kg.Extract.perLine(spark.read.parquet(graft.Fixtures.SrcCorpusParquet)))
       .withColumnRenamed("line", "line_no")
   }
 

@@ -90,8 +90,7 @@ object StreamingPipeline {
         nStats.agg(sum(col("n")).as("n")))
       val mentions = Extract.mentionsFromLines(perLine)
       val cands = Candidates.candidates(mentions, dict, broadcastDict = true)
-      val top1 = Scoring.top1(Scoring.score(mentions, cands, kbCtx,
-        Some(contexts), idfOverride = Some(idf)))
+      val top1 = Scoring.top1(Scoring.score(cands, contexts, kbCtx, idfOverride = Some(idf)))
       outIo.write(top1, s"_scores/batch=$batchId")
       // triples commit LAST: its existence marks the batch done
       outIo.write(Canonicalize.triples(Canonicalize.canonicalMentions(mentions, top1)),

@@ -248,7 +248,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // docs shorter than n emit no spans (and must not crash sequence())
     assert(dec.filter(col("doc_id") === 5L).count() == 0)
 
-    val stripped = Dedup.stripSpans(d, dec)
+    val strips = dec.filter(col("keep") === 0).select("doc_id", "span_start", "span_len")
+    val stripped = Dedup.stripSpans(d, strips)
       .as[(Long, String)].collect().toMap
     assert(stripped(1L) == boiler + " " + tails(1L), "first occurrence byte-identical")
     assert(stripped(2L) == tails(2L) && stripped(3L) == tails(3L),

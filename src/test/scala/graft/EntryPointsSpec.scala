@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps graft to one session factory and four entry points: a new `main`
   * or a hand-built session under `src/main` fails here, so probes and their
-  * drifting session settings cannot grow back. */
+  * drifting session settings cannot grow back. Likewise a function that
+  * sniffs its input's columns to pick between two input shapes. */
 class EntryPointsSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
@@ -32,5 +33,11 @@ class EntryPointsSpec extends AnyFunSuite {
     assert(filesMatching(mainRoot, """def\s+main\s*\(|extends\s+App\b""") == Set(
       "graft/Verify.scala", "graft/Bench.scala",
       "graft/kg/Pipeline.scala", "graft/ops/CurationPipeline.scala"))
+  }
+
+  test("only StagedRun sniffs a frame's columns (one input shape per function)") {
+    // the lineage-format check for checkpoint dirs written before the params
+    // column existed is the one legitimate schema test
+    assert(filesMatching(mainRoot, """\.columns\.contains\(""") == Set("graft/io/StagedRun.scala"))
   }
 }

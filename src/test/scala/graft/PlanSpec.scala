@@ -51,7 +51,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("J1: small dictionary plans a BroadcastHashJoin") {
-    val mentions = Extract.mentions(CorpusGen.srcFiles(spark, 20).toDF())
+    val mentions = Extract.mentionsFromLines(Extract.perLine(CorpusGen.srcFiles(spark, 20).toDF()))
     val dict = Candidates.dictionary(CorpusGen.kbEntries(spark).toDF())
     val p = plan(Candidates.candidates(mentions, dict, broadcastDict = true))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
@@ -75,7 +75,7 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     try {
       val scored = graft.kg.Scoring.top1(graft.kg.Scoring.score(
-        mentions, cands, CorpusGen.kbContexts(spark).toDF(), Some(Extract.contexts(pl))))
+        cands, Extract.contexts(pl), CorpusGen.kbContexts(spark).toDF()))
       val p = plan(scored)
       assert(!p.contains("SortMergeJoin"), s"SMJ in scoring plan:\n$p")
       // top1's max(struct) plans a partial SortAggregate (struct agg buffers
@@ -208,7 +208,7 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     try {
       val scored = graft.kg.Scoring.score(
-        mentions, cands, CorpusGen.kbContexts(spark).toDF(), Some(Extract.contexts(pl)),
+        cands, Extract.contexts(pl), CorpusGen.kbContexts(spark).toDF(),
         broadcastKbCtx = false)
       val p = plan(scored)
       // the SHUFFLE_HASH hint overrides size-based broadcast: the kbCtx join
@@ -247,7 +247,7 @@ class PlanSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
     try {
       def planFor(bcTerms: Boolean): String = plan(graft.kg.Scoring.score(
-        mentions, cands, CorpusGen.kbContexts(spark).toDF(), Some(Extract.contexts(pl)),
+        cands, Extract.contexts(pl), CorpusGen.kbContexts(spark).toDF(),
         broadcastKbTerms = bcTerms))
       val pb = planFor(true)
       assert(pb.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftSemi")),

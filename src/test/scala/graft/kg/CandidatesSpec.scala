@@ -11,7 +11,7 @@ class CandidatesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private lazy val src = CorpusGen.srcFiles(spark, 60).toDF().cache()
-  private lazy val mentions = Extract.mentions(src).cache()
+  private lazy val mentions = Extract.mentionsFromLines(Extract.perLine(src)).cache()
   private lazy val dict = Candidates.dictionary(CorpusGen.kbEntries(spark).toDF()).cache()
 
   test("salted join ≡ broadcast join across hot-key thresholds (incl. all-hot and none-hot)") {

@@ -121,5 +121,12 @@ class DeltaSpec extends AnyFunSuite {
         snapshot = Some(badSnap))
     }
     assert(ex.getMessage.contains("sha256 invariant"))
+    // a base without its (key, sha) fingerprint is refused, not re-derived
+    ioV1.drop(spark, "stage0_shas")
+    val noShas = intercept[IllegalArgumentException] {
+      new Pipeline(new ParquetTableIO(s"$base/delta2"), "v2-delta").runDelta(spark,
+        CorpusGen.srcFilesV2(spark, 40).toDF(), kb, kbCtx, prevIo = ioV1)
+    }
+    assert(noShas.getMessage.contains("previous run's stage0_shas table"), noShas.getMessage)
   }
 }

@@ -18,8 +18,11 @@ class ExtractSpec extends AnyFunSuite {
       "var junk = 42"                                        // L4: noise
     ).mkString("\n"))
 
+  private def mentionsOf(files: SourceFile*) =
+    Extract.mentionsFromLines(Extract.perLine(files.toDS().toDF()))
+
   private lazy val mentions =
-    Extract.mentions(Seq(fixture).toDS().toDF()).collect()
+    mentionsOf(fixture).collect()
       .map(r => (r.getAs[Int]("line"), r.getAs[String]("kind"), r.getAs[String]("surface"),
                  r.getAs[String]("norm")))
       .toSet
@@ -46,9 +49,11 @@ class ExtractSpec extends AnyFunSuite {
   }
 
   test("E6: context window covers ±2 lines") {
-    val m = Extract.mentions(Seq(fixture).toDS().toDF())
-      .filter("surface = 'alpha_beta'").collect()(0)
-    val ctx = m.getAs[scala.collection.Seq[String]]("ctx_terms")
+    val pl = Extract.perLine(Seq(fixture).toDS().toDF())
+    val ctxId = Extract.mentionsFromLines(pl)
+      .filter("surface = 'alpha_beta'").collect()(0).getAs[Long]("ctx_id")
+    val ctx = Extract.contexts(pl).filter(s"ctx_id = $ctxId").collect()(0)
+      .getAs[scala.collection.Seq[String]]("ctx_terms")
     assert(ctx.contains("kernel") && ctx.contains("socket") && ctx.contains("junk"))
     assert(!ctx.contains("provides")) // L0 is 3 lines away
   }
@@ -62,7 +67,7 @@ class ExtractSpec extends AnyFunSuite {
         "// see require('kb/GammaDelta') for details",  // L0: comment ∧ import-shaped
         "const GammaDelta = require('kb/GammaDelta')"   // L1: a real import
       ).mkString("\n"))
-    val ms = Extract.mentions(Seq(f).toDS().toDF()).collect()
+    val ms = mentionsOf(f).collect()
       .map(r => (r.getAs[Int]("line"), r.getAs[String]("kind"), r.getAs[String]("surface"))).toSet
     assert(ms == Set((0, "doccomment", "GammaDelta"), (1, "import", "GammaDelta")),
       s"comment-first gating violated: $ms")
@@ -72,7 +77,7 @@ class ExtractSpec extends AnyFunSuite {
   }
 
   test("E8: mention ids are unique per (file, line, kind, surface)") {
-    val df = Extract.mentions(Seq(fixture, fixture.copy(path = "src/B.scala")).toDS().toDF())
+    val df = mentionsOf(fixture, fixture.copy(path = "src/B.scala"))
     assert(df.select("mention_id").distinct().count() == df.count())
   }
 }

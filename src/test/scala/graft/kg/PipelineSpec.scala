@@ -19,13 +19,19 @@ class PipelineSpec extends AnyFunSuite {
   private val N = 150
 
   private def runInMemory(s: SparkSession): DataFrame = {
-    val src = CorpusGen.srcFiles(s, N).toDF()
-    val mentions = Extract.mentions(src)
+    val perLine = Extract.perLine(CorpusGen.srcFiles(s, N).toDF())
+    val mentions = Extract.mentionsFromLines(perLine)
     val dict = Candidates.dictionary(CorpusGen.kbEntries(s).toDF())
     val cands = Candidates.candidates(mentions, dict, broadcastDict = true)
-    val top1 = Scoring.top1(Scoring.score(mentions, cands, CorpusGen.kbContexts(s).toDF()))
+    val top1 = Scoring.top1(Scoring.score(cands, Extract.contexts(perLine),
+                                          CorpusGen.kbContexts(s).toDF()))
     Canonicalize.triples(Canonicalize.canonicalMentions(mentions, top1))
   }
+
+  // One in-memory run, materialized once and read by every test that only
+  // needs its triples. localCheckpoint, not cache(): the cache manager would
+  // also serve the determinism test's identical plans, which must execute.
+  private lazy val inMemory: DataFrame = runInMemory(spark).localCheckpoint()
 
   // conf included: the determinism/resume gates cover the full output row,
   // not just the key (conf was previously partition-order-dependent).
@@ -34,13 +40,13 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3))).toSeq
 
   test("P/R ≥ 0.95 vs generator gold") {
-    val pr = Eval.precisionRecall(runInMemory(spark), CorpusGen.gold(spark, N).toDF()).collect()(0)
+    val pr = Eval.precisionRecall(inMemory, CorpusGen.gold(spark, N).toDF()).collect()(0)
     val (p, r) = (pr.getAs[Double]("precision"), pr.getAs[Double]("recall"))
     assert(p >= 0.95 && r >= 0.95, s"precision=$p recall=$r")
   }
 
   test("P/R ≥ 0.95 vs the independent single-threaded oracle") {
-    val engine = collectTriples(runInMemory(spark)).map(t => (t._1, t._2, t._3)).toSet
+    val engine = collectTriples(inMemory).map(t => (t._1, t._2, t._3)).toSet
     val oracle = Oracle.annotate(
       (0 until N).map(i => CorpusGen.genFile(i.toLong)._1),
       (1L to CorpusGen.NumEntities).map(CorpusGen.kbEntry),
@@ -103,7 +109,7 @@ class PipelineSpec extends AnyFunSuite {
     val fromFile = Eval.goldFromParquet(spark, goldPath)
     val gen = CorpusGen.gold(spark, N).toDF()
     assert(fromFile.exceptAll(gen).count() == 0 && gen.exceptAll(fromFile).count() == 0)
-    val pr = Eval.precisionRecallFromPath(spark, runInMemory(spark), goldPath).collect()(0)
+    val pr = Eval.precisionRecallFromPath(spark, inMemory, goldPath).collect()(0)
     assert(pr.getAs[Double]("precision") >= 0.95 && pr.getAs[Double]("recall") >= 0.95)
   }
 
@@ -117,7 +123,7 @@ class PipelineSpec extends AnyFunSuite {
       spark.read.parquet(s"$base/src"),
       spark.read.parquet(s"$base/kb"),
       spark.read.parquet(s"$base/ctx"))
-    assert(collectTriples(triples) == collectTriples(runInMemory(spark)))
+    assert(collectTriples(triples) == collectTriples(inMemory))
   }
 
   test("forced large-KB paths (salted dict join + SHJ scoring) emit identical triples") {

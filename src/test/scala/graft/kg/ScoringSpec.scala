@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import graft.SparkTestSession
 
 /** Hand-computed cosine + deterministic top-1 (A1–A4, W1, W3). */
@@ -8,17 +9,18 @@ class ScoringSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  // Two mentions, two candidate entities each. Entity 1's context matches
-  // mention A; entity 2's matches mention B; entity 3 has no overlap at all.
-  private val mentions = Seq(
-    (1L, 101L, "r", "p", "c", 0, "ident", "X", "x", Seq("alpha", "beta", "alpha")),
-    (2L, 102L, "r", "p", "c", 1, "ident", "Y", "y", Seq("gamma", "delta"))
-  ).toDF("mention_id", "ctx_id", "repo", "path", "commit", "line", "kind", "surface", "norm", "ctx_terms")
+  // Two mentions (1 on context 101, 2 on context 102), two or three candidate
+  // entities each. Entity 1's context matches mention 1; entity 2's matches
+  // mention 2; entity 3 has no overlap at all.
+  private val contexts = Seq(
+    (101L, Seq("alpha", "beta", "alpha")),
+    (102L, Seq("gamma", "delta"))
+  ).toDF("ctx_id", "ctx_terms")
 
   private val candidates = Seq(
-    (1L, 1L, 0.9), (1L, 2L, 0.5), (1L, 3L, 0.99),
-    (2L, 1L, 0.9), (2L, 2L, 0.5)
-  ).toDF("mention_id", "entity_id", "prior")
+    (1L, 101L, 1L, 0.9), (1L, 101L, 2L, 0.5), (1L, 101L, 3L, 0.99),
+    (2L, 102L, 1L, 0.9), (2L, 102L, 2L, 0.5)
+  ).toDF("mention_id", "ctx_id", "entity_id", "prior")
 
   private val kbCtx = Seq(
     (1L, "alpha", 1.0), (1L, "beta", 1.0),
@@ -26,12 +28,14 @@ class ScoringSpec extends AnyFunSuite {
     (3L, "omega", 1.0)
   ).toDF("entity_id", "term", "weight")
 
-  private lazy val byName = Scoring.score(mentions, candidates, kbCtx)
-    .collect().map(r => ((r.getAs[Long]("mention_id"), r.getAs[Long]("entity_id")),
-                          r.getAs[Double]("score"))).toMap
+  private def scores(scored: DataFrame): Map[(Long, Long), Double] =
+    scored.collect().map(r => ((r.getAs[Long]("mention_id"), r.getAs[Long]("entity_id")),
+                               r.getAs[Double]("score"))).toMap
+
+  private lazy val byName = scores(Scoring.score(candidates, contexts, kbCtx))
 
   test("A4: cosine matches hand math") {
-    // mention 1: tf = {alpha:2, beta:1}; n=2 mentions
+    // mention 1: tf = {alpha:2, beta:1}; n = 2 contexts
     // df(alpha)=1, df(beta)=1, idf = ln(3/2)+1
     val idf = math.log(3.0 / 2.0) + 1.0
     val wAlpha = 2 * idf; val wBeta = 1 * idf
@@ -47,25 +51,29 @@ class ScoringSpec extends AnyFunSuite {
   }
 
   test("W1: top-1 picks the context-matching entity, not the higher prior") {
-    val top = Scoring.top1(Scoring.score(mentions, candidates, kbCtx))
+    val top = Scoring.top1(Scoring.score(candidates, contexts, kbCtx))
       .collect().map(r => (r.getAs[Long]("mention_id"), r.getAs[Long]("entity_id"))).toMap
     assert(top == Map(1L -> 1L, 2L -> 2L))
   }
 
   test("W1: exact ties break toward the smaller entity_id deterministically") {
-    val tied = Seq((1L, 10L, 0.5), (1L, 7L, 0.5)).toDF("mention_id", "entity_id", "prior")
-    val noCtx = Seq((1L, 101L, "r", "p", "c", 0, "ident", "X", "x", Seq.empty[String]))
-      .toDF("mention_id", "ctx_id", "repo", "path", "commit", "line", "kind", "surface", "norm", "ctx_terms")
-    val top = Scoring.top1(Scoring.score(noCtx, tied, kbCtx)).collect()
+    val tied = Seq((1L, 101L, 10L, 0.5), (1L, 101L, 7L, 0.5))
+      .toDF("mention_id", "ctx_id", "entity_id", "prior")
+    val noCtx = Seq((101L, Seq.empty[String])).toDF("ctx_id", "ctx_terms")
+    val top = Scoring.top1(Scoring.score(tied, noCtx, kbCtx)).collect()
     assert(top.length == 1 && top(0).getAs[Long]("entity_id") == 7L)
   }
 
   test("scores are identical with broadcastKbCtx on and off") {
-    val off = Scoring.score(mentions, candidates, kbCtx, broadcastKbCtx = false)
-      .collect().map(r => ((r.getAs[Long]("mention_id"), r.getAs[Long]("entity_id")),
-                            r.getAs[Double]("score"))).toMap
-    assert(off.keySet == byName.keySet)
-    off.foreach { case (k, v) => assert(math.abs(v - byName(k)) < 1e-12, s"$k: $v vs ${byName(k)}") }
+    // byName broadcasts both the kbCtx join and the KB-vocabulary prune
+    for ((bcCtx, bcTerms) <- Seq((false, true), (true, false), (false, false))) {
+      val off = scores(Scoring.score(candidates, contexts, kbCtx,
+        broadcastKbCtx = bcCtx, broadcastKbTerms = bcTerms))
+      assert(off.keySet == byName.keySet, s"broadcastKbCtx=$bcCtx broadcastKbTerms=$bcTerms")
+      off.foreach { case (k, v) =>
+        assert(math.abs(v - byName(k)) < 1e-12,
+          s"broadcastKbCtx=$bcCtx broadcastKbTerms=$bcTerms $k: $v vs ${byName(k)}") }
+    }
   }
 
   test("A5: majority vote elects the cluster majority with deterministic ties") {

@@ -51,7 +51,7 @@ class StreamingSpec extends AnyFunSuite {
       val dict = Candidates.dictionary(kb)
       val cands = Candidates.candidates(mentions, dict, broadcastDict = true)
       val batchTop1 = Scoring.top1(
-        Scoring.score(mentions, cands, kbCtx, Some(Extract.contexts(pl))))
+        Scoring.score(cands, Extract.contexts(pl), kbCtx))
       val chunk2Src = spark.range(60, 120).map(id => CorpusGen.genFile(id)._1).toDF()
       val chunk2Ids = Extract.mentionsFromLines(Extract.perLine(chunk2Src))
         .select("mention_id").distinct()
